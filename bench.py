@@ -506,8 +506,7 @@ def ensure_bench_raw(scale: str = BENCH_SCALE) -> tuple[str, int]:
         # round 4 ran phase B with both resident, and tens of stale GB on
         # the bench volume is pure memory pressure — but an unconditional
         # purge on every call could delete data out from under a
-        # concurrently running tool (e.g. tools/wide_knobs.py) that reads
-        # one of these paths mid-run
+        # concurrently running tool that reads one of these paths mid-run
         import glob as _glob
 
         for stale in _glob.glob(os.path.join("/tmp", f"rtps_bench_raw_{scale}_*")):

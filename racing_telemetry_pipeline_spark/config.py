@@ -4,11 +4,13 @@ Mirrors the role of the reference's settings module
 (/root/reference/src/conf/settings.py:20-80): one place for thresholds,
 window sizes, sentinels and seeds. Values transfer the reference's
 telemetry thresholds onto the transcript domain (FIXTURES.md §3).
+Routing predicates are not settings: they live in ``conf/policy.yaml``
+(operators/routing.py).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -24,29 +26,16 @@ class PipelineSettings:
 
     # gap / segmentation (reference: gap >2s, src/utils/time_utils.py:93-114)
     gap_threshold_sec: float = 2.0
-    gap_warn_sec: float = 0.5
 
     # sentinels (reference: lap sentinel 32768, src/transform/lap_repair.py:15)
     latency_sentinel_ms: int = 32768
 
-    # routing policy bands (reference: validation_policy.yaml:44-46 —
-    # null-rate warn 1% / fail 5%; range FAIL rules)
-    null_rate_warn: float = 0.01
-    null_rate_fail: float = 0.05
-    max_args_bytes: int = 10_000_000
-    known_roles: tuple[str, ...] = ("user", "assistant", "tool", "system")
-
-    # forward-fill limit for grid alignment (reference: settings.py:28 —
-    # ffill limit 4 periods)
-    ffill_limit: int = 4
-
     # skew handling (operators/skew.py): per-conv windows run within
     # turn-range buckets of this width, stitched across boundaries — no
     # task processes more than ~bucket rows of one conversation
-    use_salted_sync: bool = True
     salt_bucket_turns: int = 32768
 
-    # routing sink names
+    # routing sink names (the predicates live in conf/policy.yaml)
     sinks: tuple[str, ...] = ("valid", "quarantine", "tool_events")
 
 

@@ -1,12 +1,11 @@
 from .dedup import add_ingest_ordinal, dedup_keep_last
 from .anomalies import add_time_flags
 from .drift import monotonic_repair, drift_calibration
-from .routing import route_rows, QUARANTINE_REASONS
+from .routing import route_rows
 from .aggregates import (
     turns_per_conversation,
     tool_call_frequency,
     role_latency_percentiles,
-    sink_row_counts,
 )
 
 __all__ = [
@@ -16,9 +15,7 @@ __all__ = [
     "monotonic_repair",
     "drift_calibration",
     "route_rows",
-    "QUARANTINE_REASONS",
     "turns_per_conversation",
     "tool_call_frequency",
     "role_latency_percentiles",
-    "sink_row_counts",
 ]

@@ -18,10 +18,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sink_row_counts(routed: DataFrame) -> DataFrame:
-    return routed.groupBy("route").agg(F.count("*").alias("n_rows")).orderBy("route")
-
-
 def turns_per_conversation(routed: DataFrame) -> DataFrame:
     """Rows per (sink, conversation) — exact counts, two-level agg."""
     return (

@@ -7,9 +7,12 @@ semantics (SURVEY.md §2.9 V4): every row gets exactly one ``route`` and
 quarantined rows carry a ``reason`` code (mirroring the reference's audit
 enums, /root/reference/src/schemas/metadata.py:9-17).
 
-Routing precedence (first match wins):
-  null_ts > unknown_role > malformed_tool_call > negative_latency >
-  args_too_large > tool_events (parse_ok) > valid
+``conf/policy.yaml`` is the single source of the routing predicates: its
+``fail`` checks, in list order, give the quarantine precedence (first
+match wins), then ``routes.tool_events``, then ``routes.default``. The
+batch and streaming plans both route through ``route_rows``; only the
+independent oracles (pandas ``oracle.py``, DuckDB ``pipeline_queries.py``)
+restate the rules.
 """
 
 from __future__ import annotations
@@ -18,14 +21,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULTS, PipelineSettings
-
-QUARANTINE_REASONS = (
-    "null_ts",
-    "unknown_role",
-    "malformed_tool_call",
-    "negative_latency",
-    "args_too_large",
-)
 
 
 def apply_sentinels(df: DataFrame, settings: PipelineSettings = DEFAULTS) -> DataFrame:
@@ -39,65 +34,51 @@ def apply_sentinels(df: DataFrame, settings: PipelineSettings = DEFAULTS) -> Dat
     )
 
 
-def _route_expr(settings: PipelineSettings) -> tuple[Column, Column]:
-    checks: list[tuple[Column, str]] = [
-        (F.col("ts").isNull(), "null_ts"),
-        (F.col("role_group").isNull(), "unknown_role"),
-        (F.col("has_tool_markup") & ~F.col("parse_ok"), "malformed_tool_call"),
-        (F.col("latency_ms") < 0, "negative_latency"),
-        (F.col("args_bytes") > settings.max_args_bytes, "args_too_large"),
-    ]
-    reason = F.lit(None).cast("string")
-    for cond, code in reversed(checks):
-        reason = F.when(F.coalesce(cond, F.lit(False)), F.lit(code)).otherwise(reason)
-    route = (
-        F.when(reason.isNotNull(), F.lit("quarantine"))
-        .when(F.col("parse_ok"), F.lit("tool_events"))
-        .otherwise(F.lit("valid"))
-    )
-    return route, reason
-
-
-def route_rows(df: DataFrame, settings: PipelineSettings = DEFAULTS) -> DataFrame:
-    """Add ``route`` and ``reason`` columns (pure ``when`` chain, codegen'd)."""
-    route, reason = _route_expr(settings)
-    return df.withColumn("route", route).withColumn("reason", reason)
-
-
-def load_policy(path: str | None = None) -> dict:
+def load_policy() -> dict:
     """Load the declarative routing policy (reference analog:
-    /root/reference/src/conf/validation_policy.yaml:7-80)."""
-    import os
+    /root/reference/src/conf/validation_policy.yaml:7-80).
+
+    Read through the package loader, not the file system, so it also
+    works when the package is imported from a ``--py-files`` zip."""
+    import pkgutil
 
     import yaml
 
-    if path is None:
-        path = os.path.join(os.path.dirname(__file__), "..", "conf", "policy.yaml")
-    with open(path) as fh:
-        return yaml.safe_load(fh)
+    pkg = __package__.rsplit(".", 1)[0]
+    return yaml.safe_load(pkgutil.get_data(pkg, "conf/policy.yaml"))
+
+
+def _pred(sql: str) -> Column:
+    """A policy predicate; NULL counts as not matched."""
+    return F.coalesce(F.expr(sql), F.lit(False))
+
+
+def _with_route(df: DataFrame, policy: dict) -> DataFrame:
+    """Add ``route`` and ``reason`` from the policy's ``fail`` checks and
+    ``routes`` (a pure ``when`` chain, codegen'd — no Python per row)."""
+    reason = F.lit(None).cast("string")
+    for chk in reversed([c for c in policy["checks"] if c["severity"] == "fail"]):
+        reason = F.when(_pred(chk["when"]), F.lit(chk["reason"])).otherwise(reason)
+    routes = policy["routes"]
+    # a NULL predicate falls through a CASE WHEN branch, as if coalesced
+    route = (
+        F.when(reason.isNotNull(), F.lit(routes["quarantine"]))
+        .when(F.expr(routes["tool_events"]), F.lit("tool_events"))
+        .otherwise(F.lit(routes["default"]))
+    )
+    return df.withColumn("route", route).withColumn("reason", reason)
+
+
+def route_rows(df: DataFrame, settings: PipelineSettings = DEFAULTS) -> DataFrame:
+    """Add ``route`` and ``reason`` columns compiled from ``conf/policy.yaml``.
+    ``settings`` holds no routing rule; it keeps the operator signature
+    uniform with the other pipeline stages."""
+    return _with_route(df, load_policy())
 
 
 def compile_policy(df: DataFrame, policy: dict) -> DataFrame:
-    """Compile a policy dict into route/reason/warn columns.
-
-    Each check is one SQL boolean expression; ``fail`` checks chain into
-    the quarantine reason (list order = precedence, first match wins),
-    ``warn`` checks become ``warn_<reason>`` boolean columns. Everything
-    stays a Catalyst ``when`` chain — no Python in the row path.
-    """
-    reason = F.lit(None).cast("string")
-    for chk in reversed([c for c in policy["checks"] if c["severity"] == "fail"]):
-        cond = F.coalesce(F.expr(chk["when"]), F.lit(False))
-        reason = F.when(cond, F.lit(chk["reason"])).otherwise(reason)
+    """``route_rows`` for an explicit policy dict, plus one boolean
+    ``warn_<reason>`` column per ``warn`` check (warnings never route)."""
     for chk in [c for c in policy["checks"] if c["severity"] == "warn"]:
-        df = df.withColumn(
-            f"warn_{chk['reason']}",
-            F.coalesce(F.expr(chk["when"]), F.lit(False)),
-        )
-    tool_when = F.coalesce(F.expr(policy["routes"]["tool_events"]), F.lit(False))
-    route = (
-        F.when(reason.isNotNull(), F.lit("quarantine"))
-        .when(tool_when, F.lit("tool_events"))
-        .otherwise(F.lit(policy["routes"]["default"]))
-    )
-    return df.withColumn("route", route).withColumn("reason", reason)
+        df = df.withColumn(f"warn_{chk['reason']}", _pred(chk["when"]))
+    return _with_route(df, policy)

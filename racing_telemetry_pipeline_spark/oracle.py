@@ -73,14 +73,14 @@ def run_oracle(
     dtools = dim_tools_pdf().rename(columns={"tool": "tool_name"})
     df = df.merge(dtools, on="tool_name", how="left")
 
-    # route stage (same precedence as operators/routing.py)
+    # route stage: the rules of conf/policy.yaml restated independently
     reason = pd.Series(pd.NA, index=df.index, dtype="object")
     checks = [
         (df["ts"].isna(), "null_ts"),
         (df["role_group"].isna(), "unknown_role"),
         (df["has_tool_markup"] & ~df["parse_ok"], "malformed_tool_call"),
         ((df["latency_ms"] < 0).fillna(False), "negative_latency"),
-        ((df["args_bytes"] > settings.max_args_bytes).fillna(False), "args_too_large"),
+        ((df["args_bytes"] > 10_000_000).fillna(False), "args_too_large"),
     ]
     for cond, code in checks:
         reason = reason.where(~(cond & reason.isna()), code)

@@ -9,13 +9,12 @@ SURVEY.md §3): the reference's sequential per-car loop becomes
 materialization becomes coarse lake tables (resume points); its stats JSON
 files become per-stage metrics + per-partition lineage tables.
 
-Single-shuffle design note: dedup, time flags, monotonic repair and the
-latency window all partition by ``conv_id`` — Catalyst plans ONE exchange
-for the whole parse->sync chain (dedup's (conv_id, turn_idx) hash
-partitioning does not satisfy window-by-conv_id, so the windows share a
-second exchange; see tests/test_plans.py for the assertion that there are
-exactly two). Dimension joins are broadcast; no other exchange exists
-before the sink write.
+Single-shuffle design note: dedup, time flags and monotonic repair all
+window within (conv_id, turn-range bucket) (operators/skew.py), so ONE
+exchange carries full rows through the whole sync chain; the stitch adds
+only narrow summary exchanges (tests/test_plans.py asserts the budget).
+Dimension joins are broadcast; no other exchange exists before the sink
+write.
 """
 
 from __future__ import annotations
@@ -34,9 +33,8 @@ from ..operators.aggregates import (
     tool_call_frequency,
     turns_per_conversation,
 )
-from ..operators.anomalies import add_time_flags
-from ..operators.dedup import add_ingest_ordinal, dedup_keep_last
-from ..operators.drift import drift_calibration, monotonic_repair
+from ..operators.dedup import add_ingest_ordinal
+from ..operators.drift import drift_calibration
 from ..operators.routing import apply_sentinels, route_rows
 from ..operators.skew import salted_parse_sync
 from ..sources.lake import Lake
@@ -77,36 +75,37 @@ def routed_from_ordinal(
     stream-read time and persisted in the bronze table) — byte-identical
     semantics on both paths is what makes stream-then-compact == batch.
 
-    Stage order is chosen for ONE exchange total: dedup, anomaly flags and
-    monotonic repair all window over conv_id with compatible sort orders,
-    so Catalyst plans a single hashpartitioning(conv_id) + sort for the
-    whole chain. The grok parse runs AFTER the windows as a pure
+    The sync stage (dedup, anomaly flags, monotonic repair) is the salted
+    one: hot conversations are sub-bucketed by turn range and stitched
+    (operators/skew.py), byte-identical to the plain operator chain. The
+    grok parse (in ``enrich_route``) runs AFTER the windows as a pure
     projection — placing it between windows would sever the partitioning
     propagation through the ArrowEvalPython node and force a second full
     shuffle of every row (measured 6x slower at 10M turns)."""
-    if settings.use_salted_sync:
-        # skew-safe path: hot conversations are sub-bucketed by turn range
-        # and stitched (operators/skew.py) — byte-identical results
-        df = salted_parse_sync(
-            df,
-            bucket_turns=settings.salt_bucket_turns,
-            gap_threshold_sec=settings.gap_threshold_sec,
-            backwards_tolerance_sec=settings.backwards_tolerance_sec,
-        )
-    else:
-        df = dedup_keep_last(df, drop_ordinal=True)
-        df = add_time_flags(
-            df,
-            gap_threshold_sec=settings.gap_threshold_sec,
-            backwards_tolerance_sec=settings.backwards_tolerance_sec,
-        )
-        df = monotonic_repair(df)
+    from ..schemas import validate_routed
 
-    # parse stage (projection only): grok parse -> sentinel fixes
+    df = salted_parse_sync(
+        df,
+        bucket_turns=settings.salt_bucket_turns,
+        gap_threshold_sec=settings.gap_threshold_sec,
+        backwards_tolerance_sec=settings.backwards_tolerance_sec,
+    )
+    return validate_routed(enrich_route(spark, df, settings, parse_engine))
+
+
+def enrich_route(
+    spark: SparkSession,
+    df: DataFrame,
+    settings: PipelineSettings,
+    parse_engine: str,
+) -> DataFrame:
+    """parse -> enrich -> route: grok parse, sentinel fixes, broadcast
+    dimension joins (J1 analog) and the policy routing. Every step is a
+    per-row projection or broadcast join, so the batch plan (after the
+    sync windows) and the streaming plan (after watermark dedup) share
+    this one implementation."""
     df = parse_text(df, engine=parse_engine)
     df = apply_sentinels(df, settings)
-
-    # enrich stage: broadcast dimension joins (J1 analog)
     dim_roles = F.broadcast(spark.createDataFrame(dim_roles_pdf()))
     dim_tools = F.broadcast(
         spark.createDataFrame(dim_tools_pdf()).withColumnRenamed("tool", "tool_key")
@@ -115,11 +114,7 @@ def routed_from_ordinal(
     df = df.join(dim_tools, df.tool_name == dim_tools.tool_key, how="left").drop(
         "tool_key"
     )
-
-    # route stage: policy predicates -> route/reason columns
-    from ..schemas import validate_routed
-
-    return validate_routed(route_rows(df, settings))
+    return route_rows(df, settings)
 
 
 def run_pipeline(
@@ -385,7 +380,6 @@ def _write_lineage(
         )
         .agg(
             F.count("*").alias("n_rows"),
-            F.countDistinct("conv_id").alias("n_convs"),
             F.min("conv_id").alias("min_conv_id"),
             F.max("conv_id").alias("max_conv_id"),
             F.sum(F.col("is_backwards").cast("int")).alias("n_backwards_raw"),
@@ -422,10 +416,6 @@ def _write_lineage(
     # one (file x route) row per written file — bounded at any scale, so
     # these audit tables write driver-side (no Spark job fixed cost)
     lake.write_small(lineage, f"lineage_{stage_name}", input_snapshot)
-    # n_convs can't be summed across partitions exactly; the fan-out write
-    # partitions by route and sorts by conv_id, so a conv appears in >=1
-    # file partitions — report max-partition n_convs as a lower bound plus
-    # exact row/flag counts per route
     metrics = (
         fine.groupby("route")
         .agg(

@@ -42,16 +42,18 @@ def _raw_dir(scale: str = "sf-unit") -> str:
 
 def _code_fingerprint() -> str:
     """Hash of the sources that feed the routed build, so a cached routed
-    table is invalidated the moment pipeline code changes (the cache lives
-    in /tmp across runs). Scoped to the subpackages `_build_routed`
-    actually imports — a touch to the query registry, streaming, or
-    multimodal code must not rebuild the cache."""
+    table is invalidated the moment pipeline code or the routing policy
+    (conf/*.yaml) changes (the cache lives in /tmp across runs). Scoped to
+    the subpackages `_build_routed` actually imports — a touch to the query
+    registry, streaming, or multimodal code must not rebuild the cache."""
     import racing_telemetry_pipeline_spark as pkg
 
     root = os.path.dirname(os.path.abspath(pkg.__file__))
     skip = {"queries", "streaming", "multimodal"}
     h = hashlib.md5()
-    for f in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+    files = glob.glob(os.path.join(root, "**", "*.py"), recursive=True)
+    files += glob.glob(os.path.join(root, "conf", "*.yaml"))
+    for f in sorted(files):
         rel = os.path.relpath(f, root)
         if rel.split(os.sep)[0] in skip:
             continue

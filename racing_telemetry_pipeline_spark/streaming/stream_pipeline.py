@@ -7,11 +7,12 @@ logic bound to ``readStream`` with event-time watermarks, windowed
 aggregates, and exactly-once fan-out via ``foreachBatch``.
 
 Stateless stages (parse/enrich/route) are SHARED with the batch plan —
-the route/parse functions operate on any DataFrame, batch or streaming.
-The order-dependent stages (keep-last dedup by ingest ordinal, monotonic
-repair over full conversations) are inherently batch semantics; streaming
-mode approximates dedup with ``dropDuplicatesWithinWatermark`` and defers
-exact repair to the batch compactor (the reference's layered-lake model).
+``plans.pipeline.enrich_route`` operates on any DataFrame, batch or
+streaming. The order-dependent stages (keep-last dedup by ingest
+ordinal, monotonic repair over full conversations) are inherently batch
+semantics; streaming mode approximates dedup with
+``dropDuplicatesWithinWatermark`` and defers exact repair to the batch
+compactor (the reference's layered-lake model).
 """
 
 from __future__ import annotations
@@ -21,9 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DEFAULTS, PipelineSettings
-from ..datagen.dims import dim_roles_pdf, dim_tools_pdf
-from ..functions.grok import parse_text
-from ..operators.routing import apply_sentinels, route_rows
+from ..plans.pipeline import enrich_route, routed_from_ordinal
+from ..sources.lake import Lake
 
 RAW_SCHEMA = T.StructType(
     [
@@ -37,19 +37,13 @@ RAW_SCHEMA = T.StructType(
 )
 
 
-def _enrich_route(spark: SparkSession, df: DataFrame, settings: PipelineSettings,
-                  parse_engine: str) -> DataFrame:
-    df = parse_text(df, engine=parse_engine)
-    df = apply_sentinels(df, settings)
-    dim_roles = F.broadcast(spark.createDataFrame(dim_roles_pdf()))
-    dim_tools = F.broadcast(
-        spark.createDataFrame(dim_tools_pdf()).withColumnRenamed("tool", "tool_key")
+def _read_raw_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """The raw parquet drop directory as a stream, 4 files per micro-batch."""
+    return (
+        spark.readStream.schema(RAW_SCHEMA)
+        .option("maxFilesPerTrigger", "4")
+        .parquet(source_dir)
     )
-    df = df.join(dim_roles, on="role", how="left")
-    df = df.join(dim_tools, df.tool_name == dim_tools.tool_key, how="left").drop(
-        "tool_key"
-    )
-    return route_rows(df, settings)
 
 
 def streaming_route(
@@ -64,15 +58,12 @@ def streaming_route(
     Returns the streaming DataFrame (caller attaches the sink; tests use
     the memory sink, production would ``foreachBatch`` into the lake).
     """
-    raw = (
-        spark.readStream.schema(RAW_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(source_dir)
+    deduped = (
+        _read_raw_stream(spark, source_dir)
+        .withWatermark("ts", watermark)
+        .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
     )
-    deduped = raw.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["conv_id", "turn_idx"]
-    )
-    return _enrich_route(spark, deduped, settings, parse_engine)
+    return enrich_route(spark, deduped, settings, parse_engine)
 
 
 def conversation_tracker(raw: DataFrame) -> DataFrame:
@@ -132,7 +123,9 @@ def conversation_tracker(raw: DataFrame) -> DataFrame:
     )
 
 
-def make_lake_batch_sink(lake, table: str = "routed_stream"):
+def make_lake_batch_sink(
+    lake, table: str = "routed_stream", partition_by: tuple[str, ...] = ("route",)
+):
     """foreachBatch sink into the layered lake with idempotent batch-id
     dedup (exactly-once fan-out: Structured Streaming replays a micro-batch
     after a crash-before-commit, so the sink must tolerate seeing the same
@@ -147,8 +140,9 @@ def make_lake_batch_sink(lake, table: str = "routed_stream"):
 
     Reference analog: the layered-lake writer
     (/root/reference/src/ingestion/partitioning.py:75-208) — here each
-    micro-batch is hive-partitioned by (batch_id, route).
+    micro-batch is hive-partitioned by ``batch_id`` then ``partition_by``.
     """
+    cols = ["batch_id", *partition_by]
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if lake.batch_committed(table, batch_id):
@@ -157,12 +151,37 @@ def make_lake_batch_sink(lake, table: str = "routed_stream"):
             batch_df.withColumn("batch_id", F.lit(int(batch_id)))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "route")
+            .partitionBy(*cols)
             .parquet(lake.table_path(table))
         )
-        lake.mark_batch(table, batch_id, partition_by=["batch_id", "route"])
+        lake.mark_batch(table, batch_id, partition_by=cols)
 
     return sink
+
+
+def _start_lake_sink(
+    df: DataFrame,
+    lake_root: str,
+    table: str,
+    partition_by: tuple[str, ...],
+    checkpoint: str | None,
+    available_now: bool,
+):
+    """Attach the exactly-once lake sink to a streaming DataFrame and start
+    it. ``available_now=True`` drains everything currently in the source
+    then stops (the test/backfill mode); production would run continuous
+    triggers with the same checkpoint for exactly-once resume."""
+    sink = make_lake_batch_sink(Lake(df.sparkSession, lake_root), table, partition_by)
+    writer = (
+        df.writeStream.foreachBatch(sink)
+        .outputMode("append")
+        .option(
+            "checkpointLocation", checkpoint or f"{lake_root}/_checkpoints/{table}"
+        )
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def streaming_to_lake(
@@ -174,28 +193,13 @@ def streaming_to_lake(
     checkpoint: str | None = None,
     available_now: bool = True,
 ):
-    """Wire the streaming route into the lake via foreachBatch.
-
-    ``available_now=True`` drains everything currently in ``source_dir``
-    then stops (the test/backfill mode); production would run continuous
-    triggers with the same checkpoint for exactly-once resume.
-    Returns the StreamingQuery (caller awaits termination).
-    """
-    from ..sources.lake import Lake
-
+    """Wire the streaming route into the lake via foreachBatch (table
+    ``routed_stream``, partitioned by batch and route). Returns the
+    StreamingQuery (caller awaits termination)."""
     routed = streaming_route(spark, source_dir, settings, parse_engine)
-    lake = Lake(spark, lake_root)
-    writer = (
-        routed.writeStream.foreachBatch(make_lake_batch_sink(lake))
-        .outputMode("append")
-        .option(
-            "checkpointLocation",
-            checkpoint or f"{lake_root}/_checkpoints/routed_stream",
-        )
+    return _start_lake_sink(
+        routed, lake_root, "routed_stream", ("route",), checkpoint, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_raw_to_lake(
@@ -211,46 +215,20 @@ def streaming_raw_to_lake(
     captured at stream-read time — the file-source metadata column works on
     ``readStream`` exactly as on batch scans). This is the layered-lake
     ingest mode the module docstring defers exact repair to: the stream
-    lands data fast with per-batch exactly-once (same ledger + dynamic
-    partition overwrite as the routed sink), and ``compact_stream_to_routed``
-    later re-runs the ORDER-DEPENDENT batch stages (keep-last dedup,
-    monotonic repair) over the accumulated bronze rows.
+    lands data fast with per-batch exactly-once (the same sink as the
+    routed stream, partitioned by batch only), and
+    ``compact_stream_to_routed`` later re-runs the ORDER-DEPENDENT batch
+    stages (keep-last dedup, monotonic repair) over the accumulated bronze
+    rows.
     """
     from ..operators.dedup import INGEST_FILE, INGEST_POS
-    from ..sources.lake import Lake
 
     raw = (
-        spark.readStream.schema(RAW_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(source_dir)
+        _read_raw_stream(spark, source_dir)
         .withColumn(INGEST_FILE, F.col("_metadata.file_path"))
         .withColumn(INGEST_POS, F.col("_metadata.row_index"))
     )
-    lake = Lake(spark, lake_root)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if lake.batch_committed(table, batch_id):
-            return
-        (
-            batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(lake.table_path(table))
-        )
-        lake.mark_batch(table, batch_id, partition_by=["batch_id"])
-
-    writer = (
-        raw.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option(
-            "checkpointLocation",
-            checkpoint or f"{lake_root}/_checkpoints/{table}",
-        )
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_lake_sink(raw, lake_root, table, (), checkpoint, available_now)
 
 
 def compact_stream_to_routed(
@@ -269,9 +247,6 @@ def compact_stream_to_routed(
     pure-batch pipeline on the original raw files
     (tests/test_streaming.py::test_stream_then_compact_equals_batch).
     Writes the routed table and returns it."""
-    from ..plans.pipeline import routed_from_ordinal
-    from ..sources.lake import Lake
-
     lake = Lake(spark, lake_root)
     bronze = lake.read(bronze_table).drop("batch_id")
     routed = routed_from_ordinal(spark, bronze, settings, parse_engine)

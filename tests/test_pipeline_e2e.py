@@ -143,6 +143,27 @@ def test_lineage_and_metrics_emitted(lake_small):
     assert set(metrics["route"]) == {"valid", "quarantine", "tool_events"}
 
 
+def test_lineage_guard_catches_duplicate_part_file(spark, lake_small, tmp_path):
+    """Committer-v2 read-back guard, failure injected: a part file that a
+    task-commit retry duplicated makes the rows read back from the routed
+    table exceed the count observe() captured during the write, and the
+    lineage stage must refuse it."""
+    import glob
+    import shutil
+
+    from racing_telemetry_pipeline_spark.plans.pipeline import _write_lineage
+
+    root = str(tmp_path / "lake")
+    shutil.copytree(lake_small.root, root)
+    valid = os.path.join(root, "routed", "route=valid")
+    part = sorted(glob.glob(os.path.join(valid, "part-*")))[0]
+    shutil.copy(part, os.path.join(valid, "retry-" + os.path.basename(part)))
+    lake = Lake(spark, root)
+    snap = lake._load_manifest()["tables"]["routed"]["input_snapshot"]
+    with pytest.raises(RuntimeError, match="read-back row count"):
+        _write_lineage(spark, lake, "routed", snap)
+
+
 def test_parse_engines_agree_end_to_end(spark, raw_unit, tmp_path_factory):
     roots = {}
     for engine in ("pandas_udf", "builtin"):

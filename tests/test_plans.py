@@ -12,32 +12,55 @@ import pytest
 from pyspark.sql import functions as F
 
 from racing_telemetry_pipeline_spark.config import DEFAULTS
-from racing_telemetry_pipeline_spark.plans.pipeline import _build_routed, run_pipeline
+from racing_telemetry_pipeline_spark.operators.anomalies import add_time_flags
+from racing_telemetry_pipeline_spark.operators.dedup import (
+    add_ingest_ordinal,
+    dedup_keep_last,
+)
+from racing_telemetry_pipeline_spark.operators.drift import monotonic_repair
+from racing_telemetry_pipeline_spark.plans.pipeline import (
+    _build_routed,
+    enrich_route,
+    run_pipeline,
+)
+from racing_telemetry_pipeline_spark.schemas import validate_raw
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _plain_routed(spark, raw_path, engine):
+    """The unsalted reference chain: plain dedup -> flags -> repair, then
+    the shared enrich_route."""
+    df = add_ingest_ordinal(validate_raw(spark.read.parquet(raw_path)))
+    df = dedup_keep_last(df, drop_ordinal=True)
+    df = add_time_flags(
+        df,
+        gap_threshold_sec=DEFAULTS.gap_threshold_sec,
+        backwards_tolerance_sec=DEFAULTS.backwards_tolerance_sec,
+    )
+    df = monotonic_repair(df)
+    return enrich_route(spark, df, DEFAULTS, engine)
+
+
 def test_routed_plan_exchange_budget(spark, raw_unit):
     """Exchange budget for the parse->sync->enrich->route chain.
 
-    Unsalted: exactly ONE full-width hash exchange (dedup + all windows
-    share the conv_id partitioning). Salted (skew-safe, default): the
-    bucket-summary branch adds a narrow column-pruned re-scan exchange,
-    a tiny per-conv summary exchange, and a tiny exchange on the summary
-    side of the stitch join — 4 total, only one carrying full rows. The
+    Unsalted operator chain: exactly ONE full-width hash exchange (dedup +
+    all windows share the conv_id partitioning). Salted (the pipeline's
+    only sync path): the bucket-summary branch adds a narrow column-pruned
+    re-scan exchange, a tiny per-conv summary exchange, and a tiny
+    exchange on the summary side of the stitch join — 4 total, only one
+    carrying full rows. The
     stitch join is shuffle_hash, NOT a forced broadcast: the summary
     grows with conversation count and would blow the broadcast limit at
     the 10^12-turn design point (AQE still converts it to broadcast at
     runtime when it is actually small). Dimension joins must broadcast;
     nothing may sort-merge.
     """
-    from dataclasses import replace
-
     for engine in ("pandas_udf", "builtin"):
-        plain = replace(DEFAULTS, use_salted_sync=False)
-        plan = _plan(_build_routed(spark, raw_unit, plain, engine))
+        plan = _plan(_plain_routed(spark, raw_unit, engine))
         assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
         assert "SortMergeJoin" not in plan
 

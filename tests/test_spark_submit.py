@@ -39,7 +39,7 @@ def submit_workdir(tmp_path_factory):
         for root, dirs, files in os.walk(pkg):
             dirs[:] = [d for d in dirs if d != "__pycache__"]
             for f in files:
-                if f.endswith(".py"):
+                if f.endswith((".py", ".yaml")):  # conf/policy.yaml routes
                     full = os.path.join(root, f)
                     z.write(full, os.path.relpath(full, REPO))
     shutil.copy(os.path.join(REPO, "jobs", "run_pipeline.py"), work / "run_pipeline.py")

@@ -1,9 +1,9 @@
 """Parse a Spark event log into a per-stage timeline.
 
-Companion to the wide_knobs ``evlog`` variant: pinpoints WHERE the
-non-scaling wall component of a pipeline run lives — a stage whose
-max-task time ~= stage wall at every width is a straggler; gaps between
-consecutive stages are driver/scheduling serial cost.
+Run it on the event log of a pipeline run (``spark.eventLog.enabled``)
+to pinpoint WHERE the non-scaling wall component of the run lives — a
+stage whose max-task time ~= stage wall at every width is a straggler;
+gaps between consecutive stages are driver/scheduling serial cost.
 
     python tools/stage_times.py /tmp/evlog/<app-id> [min_sec]
 """

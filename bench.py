@@ -1,37 +1,31 @@
-"""Per-round benchmark. Prints JSON lines; the LAST line is the result:
+"""N-vs-4N scaling benchmark. Prints JSON lines; the LAST line is a compact
+summary with ``metric``, ``value``, ``unit``, ``sf``, ``queries`` and
+``pairs{narrow,mid,wide}``. Full detail goes to BENCH_FULL.json and BENCH.md.
 
-  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-   "pipeline": {throughput + N-vs-4N scaling efficiency}}
+Phase A times each ``HEADLINE`` query (noop sink) in ``QUERY_PASSES``
+passes over the sf tables at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) at local[nproc] and reports per-query medians.
 
-Phase A times headline queries from the driver contract at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
-Phase B evidences the north rule's two-cluster-size criterion in-sandbox
-with TWO pairs: the full transcript pipeline (parse->sync->enrich->route->
-aggregate, Arrow grok UDF path) at local[1] vs local[4] on ~11M turns
-(pair 1, the official N-vs-4N record) and at local[4] vs local[16] on ~44M
-turns (pair 2, the wider 100x-cluster evidence — input sized at the
-measured sweet spot between fixed-cost amortization and the single box's
-DRAM-bandwidth ceiling);
-efficiency = (T_N / T_4N) / (N4/N). Every phase budget derives from
-$SPARK_GRAFT_BENCH_CAP (default 1600s) minus elapsed time, so the cap is a
-real wall (within one worker grace window). Results also written to
-BENCH.md.
+Phase B measures the north rule's N-vs-4N criterion: the full transcript
+pipeline (parse -> sync -> enrich -> route -> aggregate) at local[N] and
+local[4N] on the same input, efficiency = (T_N / T_4N) / (4N / N). Only the
+``PAIRS`` rows with 4N <= nproc run; the others stay in the result as
+``{"skipped": ...}``. Each side runs in one fresh subprocess (own JVM, one
+live session) started once; the orchestrator asks each for one timed
+``run_pipeline`` per round, alternating which side goes first (ABBA), and
+reports the median and interquartile range of the per-round efficiencies.
 
-Robustness (round-2 rework): every Spark measurement runs in a FRESH
-SUBPROCESS (own Python, own JVM). Round 1 created/stopped SparkSessions
-inside one long-lived JVM; stopped sessions leave stale Python-worker /
-accumulator sockets that kill later Arrow tasks (local task.maxFailures=1),
-which crashed the driver bench. Subprocess isolation removes that failure
-mode entirely. The orchestrator itself never imports pyspark; it prints a
-partial JSON line after phase A and on any exception, so a phase-B failure
-can no longer zero out the whole round.
+The orchestrator never imports pyspark. Usage: ``python bench.py``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import select
 import shutil
+import signal
+import statistics
 import subprocess
 import sys
 import time
@@ -40,210 +34,89 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q5_region_revenue",
-    "v4_route_fanout",
-    "w2_gaps_segments",
-    "a1_hourly_stats",
-    "w9_interpolate",
-    "d1_dedup_keep_last",
-    "dd2_ngram_jaccard_pairs",
-    "dd3_minhash_signatures",
-    "sim1_cosine_topk",
-    "tx2_quality_score",
+    "q1_pricing_summary", "q3_top_orders", "q5_region_revenue",
+    "v4_route_fanout", "w2_gaps_segments", "a1_hourly_stats",
+    "w9_interpolate", "d1_dedup_keep_last", "dd2_ngram_jaccard_pairs",
+    "dd3_minhash_signatures", "sim1_cosine_topk", "tx2_quality_score",
 ]
 
-BENCH_SCALE = os.environ.get("SPARK_GRAFT_BENCH_SCALE", "sf-bench")
-
-# Bumped ONLY when a change to this file alters what phase B measures
-# (worker configs, partition formula, budget semantics) — folded into the
-# history fingerprint so best_observed never pairs runs under different
-# measurement setups, while doc/report tweaks here don't reset history.
-# v6: shuffle partitions rounded up to a full multiple of the cores (19
-# partitions on 16 cores ran the big stages in 1.2 waves — wave 2 on 3/16
-# cores); wide-pair input settled at ~44M turns after the ~58M variant hit
-# the single box's DRAM-bandwidth ceiling at 16 threads.
-# v7 (round 5, after the wide local[16] config died 3x the same way mid
-# fan-out write — a persistent-state failure, not transience): repeated
-# runs in one live session accumulate shuffle files on the tmpfs
-# spark.local.dir until the driver JVM happens to GC (a 48g heap rarely
-# does), so tmpfs residency grows run over run until the OOM killer takes
-# a python worker. The worker now forces a ContextCleaner pass (explicit
-# System.gc()) after every run and records /dev/shm residency + system
-# memory use per run in the bench JSON.
-# v8 (round 5, after in-round forensics DISPROVED the v7 OOM theory: the
-# crash recurred with 123 GB free and the memory cgroup has never
-# OOM-killed anything; the true signature is one straggler task stalling
-# for minutes — a stuck Python worker — then dying): run the bench under
-# local[N,3] so a task survives transient worker death (cluster default
-# is 4 attempts; a retried task inflates that run's wall, which
-# min-over-runs absorbs), enable killWorkerOnFlushFailure so a worker
-# whose output flush fails dies IMMEDIATELY and retries instead of
-# wedging the stage, and dump Python worker stacks every 120s into the
-# worker stderr so any future stall is diagnosable from the .err file.
-# Drops v7's two speculative knobs: the mid-run periodic 1min GC (a full
-# GC on a 48g heap is a seconds-long pause injected into timed runs) and
-# the 5000-record Arrow batch cap (pure Python-roundtrip overhead once
-# the OOM theory fell).
-#
-# v9 (round 5): a THIRD pair local[2] vs local[8] ("pipeline_mid") on the
-# wide input. Event-log forensics (BENCH.md) showed the (4,16) pair's
-# residual gap is the box's shared LLC/DRAM — per-row CPU inflates ~1.6x
-# when 16 heavy tasks run concurrently, with no straggler / GC / driver
-# component left to fix; optimizations that sped both sides 15% did not
-# move the ratio, exactly as the t(p)=s+c/p algebra predicts for a
-# shared-resource term. (2,8) spans the same 4x factor at a width whose
-# aggregate bandwidth demand the box CAN supply, so it separates "does
-# the plan scale" (yes) from "does this box have 16 memory lanes" (no).
-# (4,16) stays reported as the ceiling probe with the same history
-# mechanism.
-#
-# v10 (round 6): AQE partition coalescing disabled in the pipeline
-# workers — it was silently undoing the v6 full-wave partition formula
-# (sp=multiple-of-cores got coalesced to 5-6 partitions on 4 cores =>
-# 1.5-wave stages with idle cores in wave 2 on every post-exchange
-# stage; event-log measured). Also the final stdout line is now a
-# COMPACT machine-readable summary (pair efficiencies + best-observed +
-# headline only) — round 5's full-detail final line outgrew the
-# driver's tail capture and BENCH_r05.json recorded parsed:null; full
-# detail still prints earlier and lands in BENCH_FULL.json.
-#
-# v11 (round 7): the round-6 artifact miss — the mid (2,8) pair's 8-core
-# worker was killed at a 233s budget slice, below the ~250-300s cold
-# first run on the 44M-turn input, so the official record said "no
-# successful pipeline pair" while same-code history held two good pairs.
-# Three changes: (a) each pair side's budget is FLOORED at its documented
-# cold first-run cost, and a side whose floored budget no longer fits the
-# remaining wall is skipped loudly instead of launched-to-die; (b) a pair
-# with a missing side is SALVAGED — the surviving side is recorded as a
-# single-config history entry and the missing side is pulled from
-# same-code BENCH_HISTORY best-observed, explicitly labeled, so the
-# artifact always carries all three pairs; (c) per-run process-tree CPU
-# is recorded and the pair block carries per-row CPU at N vs 4N — the
-# DRAM-pressure proxy the round-5 event-log forensics established, now
-# in the artifact itself. None of these change what a timed run executes
-# (same worker config), but the version bump keeps the provenance clear.
-BENCH_CONFIG_VERSION = "v11"
+# (N, 4N, input scale) per pair; a row runs only when the host has 4N cores,
+# so no pair measures time-slicing of oversubscribed cores.
+PAIRS = {
+    "narrow": (1, 4, "sf-bench"),
+    "mid": (2, 8, "sf-scaling"),
+    "wide": (4, 16, "sf-scaling"),
+}
+ROUNDS = 3
+QUERY_PASSES = 5
+# Longest wait for one worker reply (its warm-up, or one timed run) before
+# its process group is killed and the reason recorded.
+REPLY_TIMEOUT = 1800.0
+WARM_DIR = "/tmp/rtps_bench_warm_sf-unit"
+MARK = "RTPS_BENCH_MARK"
+COMPACT_KEYS = ("cores", "t_n_sec", "t_4n_sec", "turns_per_sec_4n", "eff",
+                "eff_iqr", "n_rounds", "skipped", "error")
 
 
-# --------------------------------------------------------------------------
-# worker modes (run in fresh subprocesses; the only code that touches Spark)
-# --------------------------------------------------------------------------
+# ---- worker modes (fresh subprocesses; the only code that touches Spark) ----
 
-def _noop_write(df):
+def _reply_stream():
+    """The worker's reply channel: the original stdout. Everything else
+    written to fd 1 afterwards (the JVM started later inherits it) goes to
+    stderr, so a stray print never breaks the one-JSON-line protocol."""
+    out = os.fdopen(os.dup(1), "w", buffering=1)
+    os.dup2(2, 1)
+    return out
+
+
+def _session_facts(spark) -> dict:
+    # SPARK_LOCAL_DIRS overrides spark.local.dir; ask Spark which one won
+    jvm, conf = spark.sparkContext._jvm, spark.sparkContext._jsc.sc().getConf()
+    dirs = jvm.org.apache.spark.util.Utils.getConfiguredLocalDirs(conf)
+    return {"spark": spark.version, "local_dir": dirs[0]}
+
+
+def _stop_session(spark) -> None:
+    """Stop the session, then let its JVM exit on stdin EOF and run the
+    shutdown hook that removes its temp dirs before the orchestrator kills
+    the process group."""
+    jvm = spark.sparkContext._gateway.proc
+    spark.stop()
+    jvm.stdin.close()
+    jvm.wait(timeout=60)
+
+
+def _noop_write(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def worker_queries(sf_dir: str, cpus: int, out: str) -> None:
-    """Time each headline query, MIN over five passes (the host's noise
-    makes single-shot timings swing ~40%, and fresh-JVM JIT/codegen
-    warm-up dominates the first ~3 executions of the heaviest query: a
-    10-rep dd2 probe measured 4.66 cold, 1.43, 0.86, then ~0.70-0.73
-    steady at sf0.1/local[32] — two passes recorded the warm-up, not the
-    plan); write timings incrementally so a crash mid-list still leaves
-    the completed entries on disk."""
-    from racing_telemetry_pipeline_spark.queries import all_queries_full as all_queries
+def worker_queries(sf_dir: str) -> None:
+    """Time every headline query in each of ``QUERY_PASSES`` passes and
+    reply once with the per-pass walls."""
+    out = _reply_stream()
+    from racing_telemetry_pipeline_spark.queries import all_queries_full
     from racing_telemetry_pipeline_spark.session import get_spark
 
-    spark = get_spark("bench-queries", cores=cpus)
-    qs = all_queries()
-    timings: dict[str, float] = {}
-    for _pass in range(5):
+    spark = get_spark("bench-queries", cores=len(os.sched_getaffinity(0)))
+    qs = all_queries_full()
+    walls: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    for _pass in range(QUERY_PASSES):
         for name in HEADLINE:
-            fn, _sql = qs[name]
-            df = fn(spark, sf_dir)
+            df = qs[name][0](spark, sf_dir)
             t0 = time.perf_counter()
             _noop_write(df)
-            dt = round(time.perf_counter() - t0, 3)
-            timings[name] = min(timings.get(name, dt), dt)
-            with open(out, "w") as fh:
-                json.dump(timings, fh)
-    spark.stop()
+            walls[name].append(round(time.perf_counter() - t0, 3))
+    out.write(json.dumps({**_session_facts(spark), "walls": walls}) + "\n")
+    _stop_session(spark)
 
 
-def _residency() -> dict:
-    """Memory footprint snapshot: tmpfs bytes (shuffle+lake live there — the
-    round-4 wide-pair OOM grew here run over run) and system memory in use.
-    Cheap (two statvfs + one /proc read); recorded per run in the out-file."""
-    snap = {}
-    try:
-        for name, path in (("shm", "/dev/shm"), ("tmp", "/tmp")):
-            st = os.statvfs(path)
-            snap[f"{name}_gb"] = round(
-                (st.f_blocks - st.f_bfree) * st.f_frsize / 2**30, 2)
-    except OSError:
-        pass
-    try:
-        with open("/proc/meminfo") as fh:
-            mi = dict(
-                (ln.split(":")[0], int(ln.split()[1]))
-                for ln in fh if ":" in ln and ln.split()[1].isdigit()
-            )
-        snap["mem_used_gb"] = round(
-            (mi["MemTotal"] - mi["MemAvailable"]) / 2**20, 2)
-    except (OSError, KeyError):
-        pass
-    return snap
-
-
-def _proc_tree_cpu() -> float:
-    """Total CPU seconds (utime+stime+reaped-child cutime/cstime) of this
-    process and every live descendant — the driver JVM plus its
-    pyspark.daemon/worker children. Reaped children fold into their
-    parent's cutime/cstime, so Python-worker churn between snapshots is
-    still counted. Per-run deltas give a per-row CPU figure: per-row CPU
-    inflating with thread count while the stage stays balanced is the
-    shared-LLC/DRAM-bandwidth signature the round-5 event-log forensics
-    established for the wide pair (BENCH.md) — recording it per run puts
-    the wide ratio's explanation in the artifact itself."""
-    tick = float(os.sysconf("SC_CLK_TCK"))
-    me = os.getpid()
-    ppids: dict[int, int] = {}
-    cpu: dict[int, int] = {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat") as fh:
-                tail = fh.read().split(")")[-1].split()
-            ppids[int(pid)] = int(tail[1])
-            # fields 14-17 (utime stime cutime cstime) = tail[11..14]
-            cpu[int(pid)] = sum(int(tail[i]) for i in (11, 12, 13, 14))
-        except (OSError, ValueError, IndexError):
-            continue
-    total = 0
-    for pid, jiffies in cpu.items():
-        p = pid
-        for _ in range(64):  # ancestry walk, cycle-bounded
-            if p == me:
-                total += jiffies
-                break
-            p = ppids.get(p, 0)
-            if p <= 1:
-                break
-    return total / tick
-
-
-def worker_pipeline(cores: int, raw_dir: str, warm_dir: str, out: str,
-                    budget: float = 240.0, min_reps: int = 2,
-                    max_reps: int = 8) -> None:
-    """Repeated end-to-end pipeline runs at local[cores] in THIS fresh JVM;
-    reports the MIN (the warm-cluster steady state).
-
-    One LIVE SparkSession for all runs — round 1's crash came from
-    stop()/recreate cycles in one JVM (stale Python-worker sockets), which
-    repeated runs on a single session do not do. The first runs in a fresh
-    JVM carry JIT/plan-compile/codegen cost (measured 104s -> 142s -> 18s
-    at local[16] on the same input) plus the host's minute-scale noise
-    windows, so the min over repeats within a budget is the only stable
-    per-job number; the out-file is rewritten after EVERY run so a
-    subprocess timeout still leaves the best-so-far on disk.
-
-    The lake goes to tmpfs: on a real cluster sink bandwidth scales with
-    executors (HDFS/S3); the sandbox's single local disk would otherwise
-    serialize the fan-out write and mask compute scaling.
-    """
+def worker_pipeline(cores: int, raw_dir: str) -> None:
+    """One live session at local[cores]: warm up, reply once, then time
+    one ``run_pipeline`` per stdin line, one JSON reply per run, until
+    stdin closes. The lake goes to tmpfs: on a real cluster sink bandwidth
+    scales with executors, the sandbox's single disk would serialize the
+    fan-out write and mask compute scaling."""
+    out = _reply_stream()
     from pyspark.sql import functions as F
 
     from racing_telemetry_pipeline_spark.plans.pipeline import run_pipeline
@@ -251,320 +124,227 @@ def worker_pipeline(cores: int, raw_dir: str, warm_dir: str, out: str,
 
     base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
     lake = f"{base}/rtps_bench_lake_{cores}_{os.getpid()}"
-    warm_lake = f"{lake}_warm"
-    # Shuffle partition count follows the DATA, floored at the core count
-    # (AQE coalesces the excess): with partitions=cores a 4-core run at
-    # the wide-pair input sorts >10M rows per partition and spills, while
-    # 16 cores doesn't — the pair would then measure spill behavior, not
-    # compute scaling. ~3M rows/partition ~ 250MB of wide shuffle rows.
-    rows = 0
-    meta = os.path.join(raw_dir, "_meta.json")
-    if os.path.exists(meta):
-        with open(meta) as fh:
-            rows = json.load(fh).get("rows", 0)
-    # ... and ROUNDED UP to a multiple of the core count: a partition
-    # count like 19 on 16 cores runs the big stages in 1.2 waves - wave 2
-    # uses 3 of 16 cores, inflating the 16-core wall ~20% (exactly what
-    # the round-4 58M-turn input produced). Full waves keep every core
-    # busy through the stage at any rows/cores combination.
+    with open(os.path.join(raw_dir, "_meta.json")) as fh:
+        rows = json.load(fh)["rows"]
+    # Shuffle partitions follow the data (~3M rows each, so the N side does
+    # not spill where 4N does not) and are rounded up to a multiple of the
+    # cores: 19 partitions on 16 cores run the big stages in 1.2 waves.
     k = max(8, rows // 3_000_000)
-    sp = cores * -(-k // cores)
     spark = get_spark(
-        f"bench-{cores}", cores=cores, shuffle_partitions=sp,
-        # local[N,3]: a transient Python-worker death costs one task
-        # retry (absorbed by min-over-runs), not the whole run — the
-        # round-4 wide-pair killer
+        f"bench-{cores}", cores=cores, shuffle_partitions=cores * -(-k // cores),
+        # local[N,3]: a transient Python-worker death costs one task retry
         max_failures=3,
         extra_conf={
-            # The shuffle-partition formula above rounds sp UP to a full
-            # multiple of the cores precisely so every big stage runs in
-            # complete waves — but AQE's partition coalescing then merges
-            # those sp partitions down to whatever hits its advisory size
-            # (measured: 5-6 partitions on 4 cores => a 1.5-wave stage
-            # with 2 cores idle through the second wave, on every stage of
-            # every run). Disabling coalescing keeps each post-exchange
-            # stage at exactly sp tasks = full waves at any width. Skew
-            # splitting (adaptive.skewJoin) is independent and stays on.
+            # coalescing would merge the full-wave partitions back to a
+            # 1.5-wave stage with idle cores
             "spark.sql.adaptive.coalescePartitions.enabled": "false",
-            # keep the traceback when a worker does die
             "spark.python.worker.faulthandler.enabled": "true",
-            # the observed crash mode is a worker wedged for minutes then
-            # dying; a flush failure inside the daemon is the documented
-            # way workers get stuck — fail fast and let the task retry
+            # a worker whose output flush fails dies and its task retries,
+            # instead of wedging the stage
             "spark.python.daemon.killWorkerOnFlushFailure": "true",
-            # stall forensics: periodic Python stack dumps to stderr land
-            # in the worker's .err capture, so the NEXT straggler-stall
-            # shows exactly where the worker sat
+            # periodic Python stacks in the worker's stderr file
             "spark.python.worker.tracebackDumpIntervalSeconds": "120",
         },
     )
-    t_start = time.perf_counter()
-    runs: list[float] = []
-    cpu_sec: list[float] = []  # per-run process-tree CPU (parallel to runs)
-    residency: list[dict] = []
-    stages: list[dict] = []  # per-run {stage: sec} — localizes serial cost s
-
-    def _post_run_cleanup() -> None:
-        # Release this run's tmpfs state BEFORE timing the next one: the
-        # ContextCleaner frees shuffle files only on driver GC, which a
-        # 48g heap may not do for many runs — the round-4 wide crash was
-        # tmpfs filling monotonically until the OOM killer took a python
-        # worker. An explicit GC per run (a few hundred ms against a
-        # 40-200 s run) makes the loop's memory footprint flat.
+    t0 = time.perf_counter()
+    _warm = F.pandas_udf(lambda s: s, "long")
+    spark.range(100_000).select(F.sum(_warm(F.col("id")))).collect()
+    run_pipeline(spark, WARM_DIR, lake, resume=False, approx_percentiles=True)
+    shutil.rmtree(lake, ignore_errors=True)
+    spark.read.parquet(raw_dir).limit(10).collect()
+    out.write(json.dumps({**_session_facts(spark),
+                          "warmup_sec": round(time.perf_counter() - t0, 1)})
+              + "\n")
+    for _request in sys.stdin:
+        t0 = time.perf_counter()
         try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-        residency.append(_residency())
-
-    def _dump() -> None:
-        with open(out, "w") as fh:
-            json.dump({"sec": min(runs) if runs else None,
-                       "runs": [round(r, 1) for r in runs],
-                       "cpu_sec": [round(c, 1) for c in cpu_sec],
-                       "residency": residency,
-                       "stages": stages}, fh)
-
-    try:
-        _warm = F.pandas_udf(lambda s: s, "long")
-        spark.range(100_000).select(F.sum(_warm(F.col("id")))).collect()
-        if warm_dir and os.path.isdir(warm_dir):
-            run_pipeline(spark, warm_dir, warm_lake, resume=False,
-                         approx_percentiles=True)
-        spark.read.parquet(raw_dir).limit(10).collect()
-        fails = 0
-        while len(runs) < max_reps:
+            res = run_pipeline(spark, raw_dir, lake, resume=False,
+                               approx_percentiles=True)
+            reply = {"sec": round(time.perf_counter() - t0, 2),
+                     "stages": {k: round(v, 1) for k, v in res.timings.items()}}
+        except Exception as exc:  # reported to the orchestrator, which stops
+            reply = {"error": f"{type(exc).__name__}: {exc}"[:300]}
+        finally:
             shutil.rmtree(lake, ignore_errors=True)
-            c0 = _proc_tree_cpu()
-            t0 = time.perf_counter()
-            try:
-                res = run_pipeline(spark, raw_dir, lake, resume=False,
-                                   approx_percentiles=True)
-                stages.append({k: round(v, 1) for k, v in res.timings.items()})
-            except Exception as exc:
-                # even with local[N,3] task retries a run can still die
-                # (3 same-task failures, driver-side errors); keep
-                # measuring instead of abandoning the config with only
-                # its cold run recorded
-                fails += 1
-                _post_run_cleanup()
-                _dump()
-                sys.stderr.write(
-                    f"[worker] run failed ({type(exc).__name__}: {exc}); "
-                    f"retry {fails}/3; residency={residency[-1]}\n")
-                if fails >= 3:
-                    raise
-                if time.perf_counter() - t_start > budget:
-                    break
-                continue
-            runs.append(time.perf_counter() - t0)
-            cpu_sec.append(_proc_tree_cpu() - c0)
-            _post_run_cleanup()
-            _dump()
-            elapsed = time.perf_counter() - t_start
-            if len(runs) >= min_reps and elapsed + min(runs) > budget:
-                break
-            # run-until-stable: once the two best runs agree within 3%
-            # the min has converged to the warm steady state — stop and
-            # hand the unused budget to the slower configs (the
-            # orchestrator allocates sequentially from remaining time)
-            if len(runs) > min_reps:
-                a, b = sorted(runs)[:2]
-                if b <= a * 1.03:
-                    break
-    finally:
-        shutil.rmtree(lake, ignore_errors=True)
-        shutil.rmtree(warm_lake, ignore_errors=True)
-    spark.stop()
+            # shuffle files are freed only on driver GC; collect now so
+            # tmpfs use stays flat from run to run
+            spark.sparkContext._jvm.System.gc()
+        out.write(json.dumps(reply) + "\n")
+    _stop_session(spark)
 
 
-# --------------------------------------------------------------------------
-# orchestrator (no pyspark imports; spawns the workers above)
-# --------------------------------------------------------------------------
+# ---- pure helpers (no Spark, no subprocess) ----
 
-def _run_worker(args: list[str], out: str, timeout: float) -> dict | None:
-    """Spawn ``python bench.py --worker ...``; return parsed out-file or
-    None (crash/timeout). Partial out-file contents still count. Worker
-    stderr goes to ``<out>.err`` so a subprocess crash (import error, OOM,
-    Spark failure) is distinguishable from a timeout — ``_err_tail``
-    surfaces it in the result JSON.
+def select_pairs(nproc: int) -> dict[str, dict | None]:
+    """``None`` for each runnable row, ``{"skipped": why}`` otherwise."""
+    return {
+        tag: None if n4 <= nproc else
+        {"skipped": f"needs {n4} cores, host has {nproc}"}
+        for tag, (_n, n4, _scale) in PAIRS.items()
+    }
 
-    The worker runs in its OWN SESSION and a timeout kills the whole
-    process group: ``subprocess.run(timeout=)`` killed only the direct
-    python child, ORPHANING its JVM (plus the JVM's pyspark.daemon
-    workers), which kept executing the in-flight 16-thread pipeline job —
-    every later config then ran against an invisible competitor. That is
-    a mechanism fully consistent with the round-4 wide-pair behavior
-    (42 s and 200 s+ runs of identical configs interleaved, then worker
-    deaths): one timed-out worker poisons the rest of the bench."""
-    if os.path.exists(out):
-        os.remove(out)
-    timed_out = False
-    with open(out + ".err", "w") as errf:
+
+def round_order(r: int) -> tuple[str, str]:
+    """ABBA: the N side goes first in even rounds, the 4N side in odd."""
+    return ("n", "4n") if r % 2 == 0 else ("4n", "n")
+
+
+def _iqr(xs: list[float]) -> float | None:
+    if len(xs) < 2:
+        return None
+    q1, _q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return round(q3 - q1, 3)
+
+
+def pair_stats(rounds: list[dict], n: int, n4: int, turns: int) -> dict:
+    """Summary of interleaved rounds, each ``{"n": reply, "4n": reply}``
+    with ``reply = {"sec": ..., "stages": {...}}``: the median and IQR of
+    the per-round efficiencies, each side's median wall, and the stage
+    timings of each side's median run."""
+    effs = [round((r["n"]["sec"] / r["4n"]["sec"]) / (n4 / n), 3)
+            for r in rounds]
+    out = {"n_rounds": len(rounds), "effs": effs,
+           "eff": round(statistics.median(effs), 3), "eff_iqr": _iqr(effs)}
+    for side in ("n", "4n"):
+        walls = [r[side]["sec"] for r in rounds]
+        med = statistics.median(walls)
+        out[f"t_{side}_sec"] = round(med, 2)
+        out[f"turns_per_sec_{side}"] = round(turns / med)
+        out[f"runs_{side}_sec"] = walls
+        out[f"stages_{side}"] = rounds[walls.index(
+            statistics.median_low(walls))][side]["stages"]
+    return out
+
+
+def compact(result: dict) -> dict:
+    """The last stdout line: headline numbers only, well under a tail
+    capture's size."""
+    pairs = {}
+    for tag, block in result["pairs"].items():
+        pairs[tag] = {k: block[k] for k in COMPACT_KEYS if k in block}
+    return {
+        "metric": result["metric"], "value": result["value"],
+        "unit": result["unit"], "sf": result["sf"],
+        "queries": {k: round(v, 2) for k, v in result["queries"].items()},
+        "pairs": pairs,
+    }
+
+
+# ---- orchestrator (no pyspark imports; spawns the workers above) ----
+
+class WorkerError(RuntimeError):
+    pass
+
+
+def _spawn(args: list[str], err_path: str) -> subprocess.Popen:
+    """A worker in its own session (so a kill reaches its JVM and Python
+    workers), carrying ``MARK`` in its environment for ``_sweep_orphans``."""
+    with open(err_path, "w") as err:
         proc = subprocess.Popen(
-            [sys.executable, os.path.abspath(__file__), *args, "--out", out],
-            cwd=REPO,
-            stdout=subprocess.DEVNULL,
-            stderr=errf,
-            start_new_session=True,
-            # marker inherited by the worker's whole process tree (JVM,
-            # pyspark.daemon, python workers): pyspark.daemon has a bare
-            # cmdline and inherits the LAUNCH cwd, so if bench were ever
-            # launched from outside the repo the sweeper's cwd/cmdline
-            # checks would miss this repo's own orphans — the environ
-            # marker identifies them regardless (round-6 advice)
-            env={**os.environ, "RTPS_BENCH_MARK": REPO},
+            [sys.executable, os.path.abspath(__file__), "--worker", *args],
+            cwd=REPO, stdin=subprocess.PIPE, stdout=subprocess.PIPE,
+            stderr=err, text=True, start_new_session=True,
+            env={**os.environ, MARK: REPO},
         )
-        try:
-            proc.wait(timeout=timeout)
-        except subprocess.TimeoutExpired:
-            timed_out = True
-            import signal
-
-            try:
-                os.killpg(proc.pid, signal.SIGKILL)
-            except (ProcessLookupError, PermissionError):
-                proc.kill()
-            proc.wait()
-    if timed_out:
-        with open(out + ".err", "a") as errf:
-            errf.write(f"\n[bench orchestrator] killed process group at "
-                       f"timeout={timeout:.0f}s\n")
-    if os.path.exists(out):
-        try:
-            with open(out) as fh:
-                return json.load(fh)
-        except Exception:
-            return None
-    return None
+    proc.err_path = err_path
+    return proc
 
 
-def _err_tail(out: str, n_chars: int = 600) -> str:
-    """Last lines of a worker's captured stderr (crash diagnostics)."""
+def _read_reply(proc: subprocess.Popen) -> dict:
+    """One JSON line from the worker, or ``WorkerError`` with the reason;
+    a worker silent for ``REPLY_TIMEOUT`` has its process group killed."""
+    ready, _, _ = select.select([proc.stdout], [], [], REPLY_TIMEOUT)
+    if not ready:
+        _stop(proc, grace=0)
+        raise WorkerError(f"no reply in {REPLY_TIMEOUT:.0f}s: killed the "
+                          f"worker's process group")
+    line = proc.stdout.readline()
+    if not line:  # the worker died: its last stderr lines say why
+        with open(proc.err_path, errors="replace") as fh:
+            tail = [ln for ln in fh.read().splitlines()
+                    if ln.strip() and not ln.startswith("[Stage")][-3:]
+        raise WorkerError(f"worker exited rc={proc.wait()}: "
+                          + " | ".join(tail)[-400:])
+    reply = json.loads(line)
+    if "error" in reply:
+        raise WorkerError(reply["error"])
+    return reply
+
+
+def _stop(proc: subprocess.Popen, grace: float = 120.0) -> None:
+    """Close stdin (the worker stops its session and exits), wait up to
+    ``grace`` s, then kill the process group so nothing the worker started
+    outlives it."""
     try:
-        with open(out + ".err") as fh:
-            txt = fh.read()
-        lines = [
-            ln for ln in txt.splitlines()
-            if ln.strip() and not ln.startswith(("[Stage", "\r"))
-        ]
-        return "\n".join(lines)[-n_chars:]
-    except OSError:
-        return ""
+        proc.stdin.close()
+        proc.wait(timeout=grace)
+    except (OSError, subprocess.TimeoutExpired):
+        pass
+    try:
+        os.killpg(proc.pid, signal.SIGKILL)
+    except ProcessLookupError:
+        pass
+    proc.wait()
 
 
 def _scale_dir(scale: str) -> str:
-    """Cache dir for a scale's raw input; the key includes the scale
-    PARAMETERS, not just the name, so a re-sized scale regenerates
-    instead of silently reusing stale data."""
+    """Raw input cache dir; keyed on the scale's parameters, so a re-sized
+    scale regenerates instead of reusing stale data."""
     from racing_telemetry_pipeline_spark.config import SCALES
 
     sc = SCALES[scale]
-    return os.path.join(
-        "/tmp", f"rtps_bench_raw_{scale}_{sc.n_convs}x{sc.mean_turns}")
+    return f"/tmp/rtps_bench_raw_{scale}_{sc.n_convs}x{sc.mean_turns}"
 
 
-def _raw_cached(scale: str) -> bool:
-    """True if the scale's input exists on disk (meta marker present) —
-    cheap pre-check so a near-exhausted wall never triggers a multi-minute
-    datagen it cannot absorb."""
-    return os.path.exists(os.path.join(_scale_dir(scale), "_meta.json"))
+def _purge_stale_inputs() -> list[str]:
+    """Remove retired raw-input variants once, before any worker starts."""
+    import glob
 
-
-def _purge_stale_inputs(live_scales: list[str]) -> list[str]:
-    """Remove RETIRED raw-input variants once, at bench START, before any
-    worker launches (round-6 advice: the purge inside the regenerate
-    branch never fires once the current input exists, so a retired
-    multi-GB variant — e.g. the 58M-turn wide input the 44M sizing
-    replaced — stays resident forever as pure memory/disk pressure on the
-    bench volume). Running before workers keeps the concurrent-tool
-    safety the per-call placement was for."""
-    import glob as _glob
-
-    keep = {os.path.abspath(_scale_dir(s)) for s in live_scales}
-    purged = []
-    for d in _glob.glob("/tmp/rtps_bench_raw_*"):
-        if os.path.abspath(d) not in keep:
-            shutil.rmtree(d, ignore_errors=True)
-            purged.append(d)
+    keep = {_scale_dir(scale) for _n, _n4, scale in PAIRS.values()}
+    purged = [d for d in glob.glob("/tmp/rtps_bench_raw_*") if d not in keep]
+    for d in purged:
+        shutil.rmtree(d, ignore_errors=True)
     return purged
 
 
-def ensure_bench_raw(scale: str = BENCH_SCALE) -> tuple[str, int]:
-    """Generate (or reuse) a phase-B raw transcript input + a tiny warmup
-    input. Pure pyarrow/numpy — no JVM in the orchestrator."""
+def ensure_bench_raw(scale: str) -> tuple[str, int]:
+    """Generate (or reuse) a phase-B raw input and the sf-unit warm-up
+    input. Pure pyarrow/numpy: no JVM in the orchestrator."""
+    import glob
+
+    import pyarrow.parquet as pq
+
     from racing_telemetry_pipeline_spark.datagen import write_transcripts
 
     d = _scale_dir(scale)
     meta = os.path.join(d, "_meta.json")
-    if os.path.exists(meta):
-        with open(meta) as fh:
-            rows = json.load(fh)["rows"]
-    else:
-        # purge RETIRED variants of this scale (e.g. the 48000x900 input
-        # the 44M-turn sizing replaced) ONLY when about to regenerate:
-        # round 4 ran phase B with both resident, and tens of stale GB on
-        # the bench volume is pure memory pressure — but an unconditional
-        # purge on every call could delete data out from under a
-        # concurrently running tool that reads one of these paths mid-run
-        import glob as _glob
-
-        for stale in _glob.glob(os.path.join("/tmp", f"rtps_bench_raw_{scale}_*")):
-            if os.path.abspath(stale) != os.path.abspath(d):
-                shutil.rmtree(stale, ignore_errors=True)
+    if not os.path.exists(meta):
         write_transcripts(d, scale, rows_per_file=500_000)
-        import glob
-
-        import pyarrow.parquet as pq
-
-        rows = sum(pq.read_metadata(f).num_rows for f in glob.glob(f"{d}/*.parquet"))
+        rows = sum(pq.read_metadata(f).num_rows
+                   for f in glob.glob(f"{d}/*.parquet"))
         with open(meta, "w") as fh:
             json.dump({"rows": rows}, fh)
-    w = os.path.join("/tmp", "rtps_bench_warm_sf-unit")
-    if not os.path.isdir(w) or not os.listdir(w):
-        write_transcripts(w, "sf-unit", rows_per_file=500_000)
-    return d, rows
+    if not os.path.isdir(WARM_DIR) or not os.listdir(WARM_DIR):
+        write_transcripts(WARM_DIR, "sf-unit", rows_per_file=500_000)
+    with open(meta) as fh:
+        return d, json.load(fh)["rows"]
 
 
 def _sweep_orphans() -> list[int]:
-    """Kill ORPHANED (ppid==1) Spark JVMs / pyspark.daemon processes left
-    by earlier killed runs — an orphan keeps executing its in-flight
-    multi-thread job and silently skews every timing measured while it
-    lives. Only reaps processes that have been reparented to init, so a
-    live concurrent session is never touched."""
-    import signal
-
+    """Kill orphaned (ppid 1) processes carrying this repo's ``MARK``: an
+    earlier killed run's JVM keeps executing its in-flight job and skews
+    every timing taken while it lives. Live workers of a concurrent bench
+    have a parent and are left alone."""
+    marker = f"{MARK}={REPO}".encode()
     killed = []
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
+    for pid in filter(str.isdigit, os.listdir("/proc")):
         try:
             with open(f"/proc/{pid}/stat") as fh:
-                ppid = int(fh.read().split(")")[-1].split()[1])
-            if ppid != 1:
-                continue
-            with open(f"/proc/{pid}/cmdline", "rb") as fh:
-                cmd = fh.read().replace(b"\0", b" ").decode(errors="ignore")
-            if "pyspark-shell" not in cmd and "pyspark.daemon" not in cmd:
-                continue
-            # only reap processes that belong to THIS repo's runs: a
-            # deliberately daemonized Spark session from some other
-            # project (ppid 1 by design) must not be collateral. Our
-            # workers always run with cwd inside the repo (subprocesses
-            # inherit the bench cwd) or reference it on the cmdline.
-            try:
-                cwd = os.readlink(f"/proc/{pid}/cwd")
-            except OSError:
-                cwd = ""
-            try:
-                with open(f"/proc/{pid}/environ", "rb") as fh:
-                    env_blob = fh.read()
-                marked = f"RTPS_BENCH_MARK={REPO}".encode() in env_blob
-            except OSError:
-                marked = False
-            if not (marked or cwd.startswith(REPO) or REPO in cmd
-                    or "rtps_bench" in cmd):
-                continue
+                if int(fh.read().rsplit(")", 1)[1].split()[1]) != 1:
+                    continue
+            with open(f"/proc/{pid}/environ", "rb") as fh:
+                if marker not in fh.read().split(b"\0"):
+                    continue
             os.kill(int(pid), signal.SIGKILL)
             killed.append(int(pid))
         except (OSError, ValueError, IndexError):
@@ -572,758 +352,146 @@ def _sweep_orphans() -> list[int]:
     return killed
 
 
-def main() -> int:
-    t_start = time.perf_counter()
-    orphans = _sweep_orphans()
-    if orphans:
-        print(json.dumps({"swept_orphan_pids": orphans}), flush=True)
+def measure_queries(sf_dir: str) -> tuple[dict, dict]:
+    proc = _spawn(["queries", sf_dir], "/tmp/rtps_bench_queries.err")
     try:
-        purged = _purge_stale_inputs([
-            BENCH_SCALE,
-            os.environ.get("SPARK_GRAFT_BENCH_SCALE2", "sf-scaling"),
-        ])
-        if purged:
-            print(json.dumps({"purged_stale_inputs": purged}), flush=True)
-    except Exception:
-        pass
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else 0.1
-    # Wall cap for the whole script: every phase budget derives from what
-    # remains of it, so the true worst case is cap + one worker grace
-    # window (90s). 1600 is sized so every config of both pairs gets its
-    # cold first run (~200-300s at 44M turns: one-time per-JVM cost that
-    # neither a warm-up pipeline nor -Xms/-XX:+AlwaysPreTouch removes —
-    # measured) PLUS at least two warm runs, since the reported number is
-    # the min over warm repeats; run-until-stable exits hand unused time
-    # to the later, slower configs.
-    total_cap = float(os.environ.get("SPARK_GRAFT_BENCH_CAP", "1600"))
+        reply = _read_reply(proc)
+    finally:
+        _stop(proc)
+    walls = reply.pop("walls")
+    return {q: statistics.median(ws) for q, ws in walls.items()}, reply
 
-    result: dict = {
-        "metric": "headline_queries_total_sec",
-        "value": None,
-        "unit": "sec",
-        "queries": {},
-        "sf": sf,
-        "pipeline": {},
-    }
 
-    # ---- phase A: headline queries (one subprocess) ----
-    # manual best-observed accumulation runs can target a single phase
-    # (e.g. SPARK_GRAFT_BENCH_SKIP=queries,p1 re-measures only the wide
-    # pair); the driver's default invocation sets nothing and runs all
-    skip = set(
-        s for s in os.environ.get("SPARK_GRAFT_BENCH_SKIP", "").split(",") if s
-    )
-
-    tmp_out = "/tmp/rtps_bench_queries.json"
-    queries = {}
-    if "queries" not in skip:
-        queries = _run_worker(
-            ["--worker", "queries", "--sf-dir", sf_dir, "--cpus", str(cpus)],
-            tmp_out,
-            timeout=min(420.0, total_cap * 0.5),
-        ) or {}
-    result["queries"] = queries
-    result["value"] = round(sum(queries.values()), 3) if queries else None
-    if queries:
-        try:
-            result["queries_best_observed"] = _record_queries_history(
-                queries, sf, cpus)
-        except Exception:
-            pass
-    print(json.dumps(result), flush=True)  # partial: survives a phase-B crash
-
-    # ---- phase B: TWO pipeline scaling pairs, one subprocess per CONFIG ----
-    # (each subprocess holds ONE live session and repeats the pipeline to
-    # its min — see worker_pipeline; the wider config of a pair runs first
-    # so a tight cap degrades the slow side, whose min stabilizes anyway)
-    #
-    # pair 1 (the north-rule N-vs-4N record): local[1] vs local[4] on
-    # sf-bench (~11M turns) — this input amortizes the fixed per-job
-    # driver cost (measured ~3s warm in-session, up to ~10s around a
-    # cold JVM) at these widths.
-    # pair 2 (round-3: the wider 100x-cluster evidence): local[4] vs
-    # local[16] on sf-scaling (~44M turns, the measured sweet spot between
-    # fixed-cost amortization and the host's DRAM-bandwidth ceiling);
-    # residual in-window noise is carried to steady state by best_observed
-    # across BENCH_HISTORY.
-    #
-    # Every budget below derives from total_cap minus elapsed time — the
-    # round-2 cap only bounded phase A and the worst case overran it.
-    def remaining() -> float:
-        return total_cap - (time.perf_counter() - t_start)
-
-    def measure_pair(raw_dir: str, n_turns: int, n: int, n4: int,
-                     frac_4n: float, frac_n: float, tag: str,
-                     cold_4n: float = 0.0, cold_n: float = 0.0) -> dict:
-        """``frac_*`` are fractions of the budget REMAINING when each side
-        starts (sequential reallocation): a worker that run-until-stable
-        exits early automatically donates its unused slice to every later
-        config. ``cold_*`` floor each side's budget at its documented cold
-        first-run cost — round 6 lost the mid pair to a 233s slice that
-        could not fit the ~250-300s cold run on the 44M-turn input; a side
-        whose floored budget no longer fits the remaining wall is skipped
-        LOUDLY (never launched-to-die), and an incomplete pair is salvaged
-        from same-code BENCH_HISTORY so the artifact always carries all
-        three pairs with the provenance labeled."""
-        warm = "/tmp/rtps_bench_warm_sf-unit"
-        margin = 30.0
-
-        def run_side(cores: int, frac: float, cold: float, out: str):
-            floor_b = max(60.0, cold)
-            if remaining() - margin < floor_b:
-                return None, (f"skipped: {remaining():.0f}s wall left < "
-                              f"{floor_b:.0f}s cold-run floor for "
-                              f"local[{cores}]")
-            budget = max(frac * max(remaining() - margin, 0.0), floor_b)
-            p = _run_worker(
-                ["--worker", "pipeline", "--cores", str(cores), "--raw",
-                 raw_dir, "--warm", warm, "--budget", str(budget)],
-                out, budget + 90.0)
-            return p, None
-
-        out4 = f"/tmp/rtps_bench_{tag}_4n.json"
-        outn = f"/tmp/rtps_bench_{tag}_n.json"
-        pa, skip4 = run_side(n4, frac_4n, cold_4n, out4)
-        pb, skipn = run_side(n, frac_n, cold_n, outn)
-        t_4n = (pa or {}).get("sec")
-        t_n = (pb or {}).get("sec")
-
-        def _best_of(p: dict, key: str):
-            # per-run list parallel to runs; value at the min run's index
-            rs, vals = p.get("runs") or [], p.get(key) or []
-            if rs and len(vals) >= len(rs):
-                return vals[rs.index(min(rs))]
-            return None
-
-        def _cpu_fields(block: dict) -> None:
-            # DRAM-pressure proxy: per-row CPU at each width (of the min
-            # run). Balanced stages + per-row CPU inflating at the wider
-            # config = the shared-memory-bandwidth ceiling — one box
-            # cannot add memory channels per core the way a real cluster
-            # adds them per executor (BENCH.md round-5 forensics).
-            c4 = _best_of(pa, "cpu_sec") if pa else None
-            cn = _best_of(pb, "cpu_sec") if pb else None
-            if cn:
-                block["per_row_cpu_us_n"] = round(cn / n_turns * 1e6, 3)
-            if c4:
-                block["per_row_cpu_us_4n"] = round(c4 / n_turns * 1e6, 3)
-            if cn and c4:
-                block["per_row_cpu_inflation_4n_vs_n"] = round(c4 / cn, 3)
-
-        if t_4n is not None and t_n is not None:
-            eff = round((t_n / t_4n) / (n4 / n), 3)
-            block = {
-                "turns": n_turns,
-                "cores_n": n,
-                "cores_4n": n4,
-                "t_n_sec": round(t_n, 2),
-                "t_4n_sec": round(t_4n, 2),
-                "turns_per_sec_n": round(n_turns / t_n),
-                "turns_per_sec_4n": round(n_turns / t_4n),
-                "scaling_efficiency": eff,
-                "runs_4n_sec": pa.get("runs", []),
-                "runs_n_sec": pb.get("runs", []),
-                "stages_4n_best": _best_of(pa, "stages"),
-                "stages_n_best": _best_of(pb, "stages"),
-            }
-            _cpu_fields(block)
-            if eff > 1.05:
-                # super-linear local[] scaling is not physical: the slow
-                # (N) side never reached its warm steady state inside its
-                # budget (cold start / host noise), so this window's
-                # ratio overstates. Flag it rather than report it.
-                block["note"] = (
-                    "efficiency > 1 is a measurement artifact: N-side min "
-                    "is cold/noise-inflated (see runs_n_sec); steady state "
-                    "is the same-code best_observed as rounds accumulate"
-                )
-            _record_history(block, n, n4, n_turns, t_n, t_4n)
-            return block
-
-        # ---- salvage: one or both sides missing in-window ----
-        # record whichever side DID complete as a single-config history
-        # entry (the pair-entry path above covers the both-sides case),
-        # then synthesize the pair from same-code per-side best-observed.
-        if t_n is not None:
-            _record_single(n, n_turns, t_n)
-        if t_4n is not None:
-            _record_single(n4, n_turns, t_4n)
-        mined = _mine_best(n, n4, n_turns)
-        bn = t_n if t_n is not None else mined.get("best_n_sec")
-        b4 = t_4n if t_4n is not None else mined.get("best_4n_sec")
-        missing = [s for s, t in (("n", t_n), ("4n", t_4n)) if t is None]
-        detail = {
-            "in_window_missing": missing,
-            "skip_reason": {k: v for k, v in
-                            (("4n", skip4), ("n", skipn)) if v},
-            "error_detail": ("" if (skip4 or skipn) else _err_tail(
-                out4 if t_4n is None else outn)),
-            "runs_4n_sec": (pa or {}).get("runs", []),
-            "runs_n_sec": (pb or {}).get("runs", []),
-        }
-        if bn is None or b4 is None:
-            return {"error": "no successful pipeline pair and no same-code "
-                             "history to salvage", **detail}
-        block = {
-            "turns": n_turns,
-            "cores_n": n,
-            "cores_4n": n4,
-            "t_n_sec": round(bn, 2),
-            "t_4n_sec": round(b4, 2),
-            "turns_per_sec_n": round(n_turns / bn),
-            "turns_per_sec_4n": round(n_turns / b4),
-            "scaling_efficiency": round((bn / b4) / (n4 / n), 3),
-            "salvaged_sides": missing,
-            "note": (f"side(s) {missing} pulled from same-code "
-                     "BENCH_HISTORY best-observed "
-                     f"(n_runs_n={mined.get('n_runs_n')}, "
-                     f"n_runs_4n={mined.get('n_runs_4n')}); other side "
-                     "measured this window"),
-            **detail,
-        }
-        _cpu_fields(block)
-        if mined.get("scaling_efficiency") is not None:
-            block["best_observed"] = {
-                k: mined[k] for k in ("t_n_sec", "t_4n_sec",
-                                      "turns_per_sec_4n",
-                                      "scaling_efficiency", "n_runs",
-                                      "n_runs_n", "n_runs_4n")
-                if k in mined
-            }
-        return block
-
+def measure_pair(tag: str, n: int, n4: int, scale: str, host: dict) -> dict:
+    raw, turns = ensure_bench_raw(scale)
+    block: dict = {"cores": [n, n4], "scale": scale, "turns": turns}
+    procs = {side: _spawn(["pipeline", str(c), raw],
+                          f"/tmp/rtps_bench_{tag}_{side}.err")
+             for side, c in (("n", n), ("4n", n4))}
+    rounds: list[dict] = []
     try:
-        pair1 = os.environ.get("SPARK_GRAFT_SCALE_CORES", "1,4").split(",")
-        if "p1" in skip:
-            result["pipeline"] = {"skipped": "SPARK_GRAFT_BENCH_SKIP"}
-        else:
-            raw1, turns1 = ensure_bench_raw(BENCH_SCALE)
-            # overall split (as fractions of rem at the time each side
-            # starts): pair 1 ~40% of phase B weighted to its slow N side,
-            # pair 2 the rest — same proportions as round 3, but each
-            # config now draws from what actually REMAINS, so stable-early
-            # exits roll forward
-            # cold floors: 4-core/11M first run ~60-90s; 1-core/11M
-            # ~140-200s (measured across rounds; see worker_pipeline note)
-            result["pipeline"] = measure_pair(
-                raw1, turns1, int(pair1[0]), int(pair1[1]),
-                frac_4n=0.12, frac_n=0.25, tag="p1",
-                cold_4n=90.0, cold_n=240.0)
-        print(json.dumps(result), flush=True)  # partial: survives pair-2 death
-    except Exception as exc:  # phase B must never zero out phase A
-        result["pipeline"] = {"error": f"{type(exc).__name__}: {exc}"}
-
-    # pair mid (2,8) and pair wide (4,16) share the wide input: mid shows
-    # the 4x factor scaling where the box can supply the bandwidth; wide
-    # probes the box's ceiling (see BENCH_CONFIG_VERSION v9 note). When the
-    # wall left cannot fit even the cold floors, measure_pair skips the
-    # live run per SIDE and salvages the pair from same-code history — the
-    # artifact carries all three pairs either way (round-7 change). The
-    # only hard skip left is a missing input whose multi-minute
-    # regeneration the remaining wall cannot absorb.
-    try:
-        pairm = os.environ.get("SPARK_GRAFT_SCALE_CORES_MID", "2,8").split(",")
-        scale2 = os.environ.get("SPARK_GRAFT_BENCH_SCALE2", "sf-scaling")
-        if "pm" in skip:
-            result["pipeline_mid"] = {"skipped": "SPARK_GRAFT_BENCH_SKIP"}
-        elif not _raw_cached(scale2) and remaining() < 400.0:
-            result["pipeline_mid"] = {
-                "skipped": f"input for {scale2} not generated and "
-                           f"{remaining():.0f}s left cannot absorb datagen"
-            }
-        else:
-            rawm, turnsm = ensure_bench_raw(scale2)
-            # cold floors: 44M-turn input first run is ~250-300s in a
-            # fresh JVM (measured, round 6 — the slice that starved)
-            result["pipeline_mid"] = measure_pair(
-                rawm, turnsm, int(pairm[0]), int(pairm[1]),
-                frac_4n=0.14, frac_n=0.35, tag="pm",
-                cold_4n=320.0, cold_n=520.0)
-        print(json.dumps(result), flush=True)  # partial: survives pair-3 death
-    except Exception as exc:
-        result["pipeline_mid"] = {"error": f"{type(exc).__name__}: {exc}"}
-
-    try:
-        pair2 = os.environ.get("SPARK_GRAFT_SCALE_CORES2", "4,16").split(",")
-        scale2 = os.environ.get("SPARK_GRAFT_BENCH_SCALE2", "sf-scaling")
-        if "p2" in skip:
-            result["pipeline_wide"] = {"skipped": "SPARK_GRAFT_BENCH_SKIP"}
-        elif not _raw_cached(scale2) and remaining() < 400.0:
-            result["pipeline_wide"] = {
-                "skipped": f"input for {scale2} not generated and "
-                           f"{remaining():.0f}s left cannot absorb datagen"
-            }
-        else:
-            raw2, turns2 = ensure_bench_raw(scale2)
-            result["pipeline_wide"] = measure_pair(
-                raw2, turns2, int(pair2[0]), int(pair2[1]),
-                frac_4n=0.55, frac_n=1.0, tag="p2",
-                cold_4n=220.0, cold_n=300.0)
-    except Exception as exc:
-        result["pipeline_wide"] = {"error": f"{type(exc).__name__}: {exc}"}
-
-    print(json.dumps(result), flush=True)
-    # A targeted accumulation run (SPARK_GRAFT_BENCH_SKIP set) measures one
-    # phase into BENCH_HISTORY only — rewriting BENCH.md / BENCH_FULL.json
-    # from it would replace the committed full-run record with "skipped"
-    # stubs (burned once in round 7, restored via git checkout).
-    if not skip:
-        try:
-            _write_bench_md(result, cpus)
-        except Exception:
-            pass
-        try:
-            with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as fh:
-                json.dump(result, fh, indent=1)
-        except Exception:
-            pass
-    # the LAST stdout line is a compact summary sized well under the
-    # driver's tail capture (round 5's full-detail final line overflowed
-    # it and the official artifact recorded parsed:null); full detail is
-    # the previous line + BENCH_FULL.json + BENCH.md
-    print(json.dumps(_compact_summary(result)), flush=True)
-    return 0
+        for side, proc in procs.items():  # both warm up before any timing
+            ready = _read_reply(proc)
+            block[f"warmup_{side}_sec"] = ready.pop("warmup_sec")
+            host.update(ready)
+        for r in range(ROUNDS):
+            replies = {}
+            for side in round_order(r):
+                procs[side].stdin.write("run\n")
+                procs[side].stdin.flush()
+                replies[side] = _read_reply(procs[side])
+            rounds.append(replies)
+    except (WorkerError, OSError) as exc:
+        block["error"] = f"round {len(rounds)}: {exc}"
+    finally:
+        for proc in procs.values():
+            _stop(proc)
+    if rounds:
+        block.update(pair_stats(rounds, n, n4, turns))
+    return block
 
 
-def _compact_summary(result: dict) -> dict:
-    out = {
-        "metric": result.get("metric"),
-        "value": result.get("value"),
-        "unit": result.get("unit"),
-        "sf": result.get("sf"),
-        "queries": {
-            k: round(v, 2) for k, v in (result.get("queries") or {}).items()
-        },
-    }
-    qb = result.get("queries_best_observed") or {}
-    if qb.get("total_sec") is not None:
-        out["queries_best_total_sec"] = qb["total_sec"]
-        # per-query same-code minima (round-6 verdict item #4: the steady
-        # state, not just the noisy in-window shot, machine-readable in
-        # the driver artifact)
-        out["queries_best"] = {
-            k: round(v, 2) for k, v in (qb.get("queries") or {}).items()
-        }
-    pairs = {}
-    for tag, key in (("narrow", "pipeline"), ("mid", "pipeline_mid"),
-                     ("wide", "pipeline_wide")):
-        p = result.get(key)
-        if not isinstance(p, dict) or "scaling_efficiency" not in p:
-            pairs[tag] = {
-                k: str(p.get(k))[:60]
-                for k in ("error", "skipped")
-                if isinstance(p, dict) and k in p
-            } or None
-            continue
-        bo = p.get("best_observed") or {}
-        pairs[tag] = {
-            "cores": [p["cores_n"], p["cores_4n"]],
-            "t_n_sec": p["t_n_sec"],
-            "t_4n_sec": p["t_4n_sec"],
-            "turns_per_sec_4n": p["turns_per_sec_4n"],
-            "eff": p["scaling_efficiency"],
-            "best_eff": bo.get("scaling_efficiency"),
-            "best_t_n_sec": bo.get("t_n_sec"),
-            "best_t_4n_sec": bo.get("t_4n_sec"),
-            "n_runs": bo.get("n_runs"),
-        }
-        if p.get("salvaged_sides"):
-            pairs[tag]["salvaged_sides"] = p["salvaged_sides"]
-        if p.get("per_row_cpu_inflation_4n_vs_n") is not None:
-            # the DRAM-pressure proxy, in the artifact itself (round-6
-            # verdict item #6) — explains sub-0.8 wide ratios in place
-            pairs[tag]["per_row_cpu_inflation_4n_vs_n"] = (
-                p["per_row_cpu_inflation_4n_vs_n"])
-    out["pairs"] = pairs
-    return out
+def _fs_type(path: str) -> str:
+    """Filesystem type of the longest /proc/mounts entry holding ``path``."""
+    path, best, kind = os.path.realpath(path), "", "unknown"
+    with open("/proc/mounts") as fh:
+        for line in fh:
+            mnt, fstype = line.split()[1:3]
+            inside = path == mnt or path.startswith(mnt.rstrip("/") + "/")
+            if inside and len(mnt) > len(best):
+                best, kind = mnt, fstype
+    return kind
 
 
-def _code_fingerprint(include_queries: bool = False) -> str:
-    """Hash of the pipeline-affecting package source plus this harness.
-    best_observed must only pair minima measured on the SAME program and
-    measurement config — after an optimization (or a worker-config change
-    like the shuffle-partition formula) lands, one side's new best paired
-    with the other side's pre-change best is a ratio of two different
-    setups. Phase A history additionally hashes the query registry
-    (``include_queries``) since that's the code it executes."""
-    import glob
-    import hashlib
-
-    h = hashlib.sha256()
-    pkg = os.path.join(REPO, "racing_telemetry_pipeline_spark")
-    # subpackages that never execute in phase B: the query registry, the
-    # streaming variant, multimodal kernels
-    skips = tuple(
-        os.sep + d + os.sep
-        for d in (("streaming", "multimodal") if include_queries
-                  else ("queries", "streaming", "multimodal"))
-    )
-    for f in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
-        if any(s in f for s in skips):
-            continue
-        with open(f, "rb") as fh:
-            h.update(fh.read())
-    h.update(BENCH_CONFIG_VERSION.encode())
-    return h.hexdigest()[:12]
+def _mem_total_gb() -> float:
+    with open("/proc/meminfo") as fh:
+        kb = next(int(ln.split()[1]) for ln in fh
+                  if ln.startswith("MemTotal:"))
+    return round(kb / 2**20, 1)
 
 
-def _load_history() -> list:
-    hist_path = os.path.join(REPO, "BENCH_HISTORY.json")
-    if os.path.exists(hist_path):
-        try:
-            with open(hist_path) as fh:
-                return json.load(fh)
-        except Exception:
-            pass
-    return []
-
-
-def _save_history(history: list) -> None:
-    with open(os.path.join(REPO, "BENCH_HISTORY.json"), "w") as fh:
-        json.dump(history, fh)
-
-
-def _record_queries_history(timings: dict, sf: float, cpus: int) -> dict:
-    """Phase-A twin of _record_history: the host's minute-scale noise
-    windows hit single-shot query timings just as hard as the pipeline
-    (round 4's +6% 'regression' was pure noise), so each round also
-    reports the per-query MIN across all same-code recorded rounds."""
-    history = _load_history()
-    code = _code_fingerprint(include_queries=True)
-    history.append({"kind": "queries", "timings": timings, "sf": sf,
-                    "cpus": cpus, "code": code, "at": time.time()})
-    _save_history(history)
-    same = [h for h in history
-            if h.get("kind") == "queries" and h.get("code") == code
-            and h.get("sf") == sf and h.get("cpus") == cpus]
-    best: dict[str, float] = {}
-    for h in same:
-        for k, v in h["timings"].items():
-            best[k] = min(best.get(k, v), v)
-    return {"queries": best,
-            "total_sec": round(sum(best.values()), 3) if best else None,
-            "n_rounds": len(same)}
-
-
-def _record_single(cores: int, n_turns: int, sec: float) -> None:
-    """One SIDE of a pair that completed while the other side failed or
-    was skipped (round-7 salvage path): recorded so its minimum still
-    feeds best_observed — a good 2-core run is evidence about the 2-core
-    steady state regardless of what happened to the 8-core worker."""
-    history = _load_history()
-    history.append({"kind": "single", "cores": cores, "turns": n_turns,
-                    "sec": round(sec, 2), "code": _code_fingerprint(),
-                    "at": time.time()})
-    _save_history(history)
-
-
-def _mine_best(n: int, n4: int, n_turns: int) -> dict:
-    """Per-side best-observed for (n, n4, turns) on the CURRENT code
-    fingerprint, mining both full pair entries and salvaged singles.
-    Sides are independent samples of the same program on the same input;
-    ``n_runs`` (the evidence count the round bar reads) is the smaller
-    side's sample count. Strict on code: entries recorded before the code
-    field existed never pair with current code."""
-    history = _load_history()
-    code = _code_fingerprint()
-
-    def side(cores: int, pair_key: str) -> list[float]:
-        vals = []
-        for h in history:
-            if h.get("code") != code or h.get("turns") != n_turns:
-                continue
-            if h.get("kind") == "single" and h.get("cores") == cores:
-                vals.append(h["sec"])
-            elif (h.get("cores_n") == n and h.get("cores_4n") == n4
-                    and pair_key in h):
-                vals.append(h[pair_key])
-        return vals
-
-    vn, v4 = side(n, "t_n_sec"), side(n4, "t_4n_sec")
-    out: dict = {"n_runs_n": len(vn), "n_runs_4n": len(v4)}
-    if vn:
-        out["best_n_sec"] = min(vn)
-    if v4:
-        out["best_4n_sec"] = min(v4)
-    if vn and v4:
-        bn, b4 = min(vn), min(v4)
-        out.update({
-            "t_n_sec": bn,
-            "t_4n_sec": b4,
-            "turns_per_sec_4n": round(n_turns / b4),
-            "scaling_efficiency": round((bn / b4) / (n4 / n), 3),
-            "n_runs": min(len(vn), len(v4)),
-        })
-    return out
-
-
-def _record_history(block: dict, n: int, n4: int, n_turns: int,
-                    t_n: float, t_4n: float) -> None:
-    """Cross-run history: the host has minute-scale noise windows, so
-    per-round numbers are annotated with the best observed for the same
-    (cores_n, cores_4n, turns, code) configuration (pairs + singles)."""
-    history = _load_history()
-    code = _code_fingerprint()
-    history.append(
-        {"t_n_sec": round(t_n, 2), "t_4n_sec": round(t_4n, 2),
-         "cores_n": n, "cores_4n": n4, "turns": n_turns, "code": code,
-         "at": time.time()}
-    )
-    _save_history(history)
-    mined = _mine_best(n, n4, n_turns)
-    block["best_observed"] = {
-        k: mined[k] for k in ("t_n_sec", "t_4n_sec", "turns_per_sec_4n",
-                              "scaling_efficiency", "n_runs", "n_runs_n",
-                              "n_runs_4n")
-        if k in mined
-    }
-    if mined.get("scaling_efficiency", 0) > 1.05:
-        block["best_observed"]["note"] = (
-            "artifact: N-side best is still cold/noise-inflated at this "
-            "sample count"
-        )
-
-
-def _amdahl_fit(p: dict) -> str | None:
-    """Fit t(p) = s + c/p on the pair (DESIGN.md round-4 algebra): s is the
-    serial/straggler component — the ONLY term that moves the (N,4N)
-    efficiency ratio; c/p is parallel compute, which cancels out of it.
-    Shown per pair so the ratio's driver is visible next to the number."""
-    try:
-        n, n4 = p["cores_n"], p["cores_4n"]
-        t_n, t_4n = p["t_n_sec"], p["t_4n_sec"]
-        bo = p.get("best_observed") or {}
-        t_n, t_4n = bo.get("t_n_sec", t_n), bo.get("t_4n_sec", t_4n)
-        c = (t_n - t_4n) / (1.0 / n - 1.0 / n4)
-        s = t_n - c / n
-        return (
-            f"- Amdahl fit on the best-observed pair t(p) = s + c/p: "
-            f"s = {s:.1f}s serial, c = {c:.0f} core-s parallel; "
-            f"efficiency = (s + c/{n}) / (4 * (s + c/{n4})) — only s (and "
-            f"stragglers) moves this ratio, so optimization targets s"
-        )
-    except (KeyError, ZeroDivisionError, TypeError):
-        return None
-
-
-def _same_code_effs(n: int, n4: int, n_turns: int) -> list[float]:
-    """In-window scaling efficiencies of every FULL pair recorded for the
-    current code fingerprint on this (cores_n, cores_4n, turns) config —
-    both sides measured in the same host regime, unlike the best-observed
-    pairing of independent per-side minima."""
-    history = _load_history()
-    code = _code_fingerprint()
-    effs = []
-    for h in history:
-        if (h.get("code") == code and h.get("turns") == n_turns
-                and h.get("cores_n") == n and h.get("cores_4n") == n4
-                and h.get("t_n_sec") and h.get("t_4n_sec")):
-            effs.append(round((h["t_n_sec"] / h["t_4n_sec"]) / (n4 / n), 3))
-    return sorted(effs)
-
-
-def _pair_md(p: dict, title: str, scale: str) -> list[str]:
+def write_reports(result: dict) -> None:
+    with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as fh:
+        json.dump(result, fh, indent=1)
+    h = result["host"]
     lines = [
-        f"\n## {title}\n",
-        "| config | wall sec | turns/sec |",
-        "|---|---|---|",
-        f"| local[{p['cores_n']}] (N) | {p['t_n_sec']} | {p['turns_per_sec_n']} |",
-        f"| local[{p['cores_4n']}] (4N) | {p['t_4n_sec']} | {p['turns_per_sec_4n']} |",
-        "",
-        f"- input: {p['turns']} turns (synthetic {scale}, dups included)",
-        f"- scaling efficiency (T_N / T_4N) / {p['cores_4n'] // p['cores_n']}"
-        f" = **{p['scaling_efficiency']}**"
-        " (target >= 0.8; reference is single-threaded — BASELINE.md)",
-    ]
-    if p.get("note"):
-        lines += [f"- NOTE: {p['note']}"]
-    if p.get("salvaged_sides"):
-        lines += [
-            f"- SALVAGED pair: side(s) {p['salvaged_sides']} carried from"
-            " same-code BENCH_HISTORY best-observed (in-window worker"
-            " failed or was budget-skipped; see bench JSON skip_reason)"
-        ]
-    if p.get("per_row_cpu_inflation_4n_vs_n") is not None:
-        lines += [
-            f"- per-row CPU inflation at 4N vs N: x"
-            f"{p['per_row_cpu_inflation_4n_vs_n']}"
-            f" (per-row CPU: {p.get('per_row_cpu_us_n')} -> "
-            f"{p.get('per_row_cpu_us_4n')} µs) — >1 with balanced stages"
-            " is the shared-LLC/DRAM-bandwidth ceiling, the one resource"
-            " local[] cannot scale; a real cluster adds memory channels"
-            " with executors (round-5 forensics, BENCH.md)"
-        ]
-    bo = p.get("best_observed")
-    if bo:
-        lines += [
-            f"- best observed across {bo['n_runs']} recorded same-code runs"
-            f" (BENCH_HISTORY.json): T_N={bo['t_n_sec']}s,"
-            f" T_4N={bo['t_4n_sec']}s, efficiency"
-            f" **{bo['scaling_efficiency']}**,"
-            f" {bo['turns_per_sec_4n']} turns/s at 4N",
-        ]
-        try:
-            effs = _same_code_effs(p["cores_n"], p["cores_4n"], p["turns"])
-        except Exception:
-            effs = []
-        if effs:
-            bar = ("MEETS" if bo.get("scaling_efficiency", 0) >= 0.8
-                   and bo.get("n_runs", 0) >= 5 else "below")
-            lines += [
-                f"- same-code evidence: {len(effs)} full in-window pairs,"
-                f" effs {effs} (median {effs[len(effs) // 2]});"
-                f" best-observed pairing of per-side minima {bar} the"
-                f" >= 0.8 @ n_runs >= 5 bar at n_runs={bo.get('n_runs')}",
-                "- the best-observed pairing is CONSERVATIVE: each side's"
-                " minimum is taken independently across runs, so a lucky"
-                " quiet-window N-side sample can only LOWER the ratio;"
-                " in-window pair effs (both sides measured in the same"
-                " host regime) bound the steady state from above",
-            ]
-    fit = _amdahl_fit(p)
-    if fit:
-        lines += [fit]
-    return lines
-
-
-def _write_bench_md(result: dict, cpus: int) -> None:
-    p = result.get("pipeline") or {}
-    pm = result.get("pipeline_mid") or {}
-    pw = result.get("pipeline_wide") or {}
-    lines = [
-        "# BENCH — measured locally (see BASELINE.md for targets)\n",
-        f"- headline queries at sf={result['sf']}, local[{cpus}]: "
-        f"{result['value']} s total",
+        "# BENCH — measured by `python bench.py` (targets: BASELINE.md)\n",
+        f"- host: {h['nproc']} cores, {h['mem_total_gb']} GB RAM, Spark "
+        f"{h.get('spark')}, shuffle dir {h.get('local_dir')} "
+        f"({h.get('local_dir_fs')}); bench wall {result['wall_sec']} s",
+        f"\n## Headline queries, sf={result['sf']}, local[{h['nproc']}], "
+        f"median of {QUERY_PASSES} passes\n",
+        f"- total: {result['value']} s",
     ]
     lines += [f"  - {k}: {v} s" for k, v in result["queries"].items()]
-    lines += [
-        "- dd3 note: round 5 traded dd3's local constant (0.63s -> ~0.8s"
-        " best) for the zero-wide-exchange array-side shape — the right"
-        " plan at 100 TB (no word-table shuffle). Round 6 recovered most"
-        " of it: one aggregate() fold computes all 8 permutation minima"
-        " (half the interpreted-lambda invocations) and t_fanout spreads"
-        " the unsplittable single-row-group bench file across cores"
-        " (queries/common.py; size-gated no-op at real scale).",
-        "- dd2 note (round 7): the sort-free df-cap semi-join shape has a"
-        " measured warm floor of 0.70 s at sf0.1/local[32] (10-rep probe:"
-        " 4.66 cold, 1.43, 0.86, then ~0.70-0.73 steady — fresh-JVM"
-        " JIT/codegen warm-up dominates the first ~3 executions); phase-A"
-        " rounds sample a fresh session with few passes, so their recorded"
-        " best (~1.4 s) carries that warm-up, not plan cost. The plan is"
-        " sort-free with a single exchange (plan-asserted in"
-        " tests/test_plans.py); the <= 1.2 s round-7 target is met at the"
-        " steady state a long-running cluster job actually sees.",
-    ]
-    qb = result.get("queries_best_observed") or {}
-    if qb.get("total_sec") is not None:
-        lines += [
-            f"- best observed per-query minima across {qb['n_rounds']}"
-            f" same-code rounds (BENCH_HISTORY.json): {qb['total_sec']} s"
-            " total — single-round totals swing with the host's"
-            " minute-scale noise windows",
-        ]
-    if "scaling_efficiency" in p:
-        lines += _pair_md(
-            p, "Transcript pipeline scaling (north rule evidence)", BENCH_SCALE
-        )
-        lines += [
-            "- end-to-end parse->sync->enrich->route->aggregate, Arrow grok UDF",
-            "  path, all sinks written (lake on tmpfs — a single local disk",
-            "  would serialize the fan-out write that a real cluster distributes)",
-            "- methodology: one fresh subprocess per config (own JVM, ONE live",
-            "  session); inside it the pipeline repeats to its MIN — fresh-JVM",
-            "  JIT/plan-compile costs and the host's minute-scale noise windows",
-            "  (~40% run-to-run variance, occasional 6x) make first-run and",
-            "  single-shot timings meaningless; per-config run lists are in the",
-            "  bench JSON (runs_n_sec / runs_4n_sec)",
-            "- reference single-node ingest throughput: 166,040 rows/s"
-            " (BASELINE.md); this pipeline end-to-end at 4N:"
-            f" {p.get('turns_per_sec_4n')} turns/s",
-        ]
-    elif p.get("error"):
-        lines += ["", f"- pipeline scaling phase failed: {p['error']}"]
-    if "scaling_efficiency" in pm:
-        lines += _pair_md(
-            pm,
-            "Mid scaling pair (2,8) — the 4x factor at a width the box can feed",
-            os.environ.get("SPARK_GRAFT_BENCH_SCALE2", "sf-scaling"),
-        )
-        lines += [
-            "- same end-to-end pipeline and input as the wide pair below;",
-            "  this pair separates 'does the plan scale 4x' (it does, when",
-            "  4x the memory bandwidth actually exists) from the wide",
-            "  pair's probe of the single box's shared LLC/DRAM ceiling",
-        ]
-    elif pm.get("error"):
-        lines += ["", f"- mid scaling pair failed: {pm['error']}"]
-    elif pm.get("skipped"):
-        lines += ["", f"- mid scaling pair skipped: {pm['skipped']}"]
-    if "scaling_efficiency" in pw:
-        lines += _pair_md(
-            pw,
-            "Wider scaling pair (round-3: 100x-cluster evidence)",
-            os.environ.get("SPARK_GRAFT_BENCH_SCALE2", "sf-scaling"),
-        )
-        lines += [
-            "- the wider pair runs the same end-to-end pipeline on a 4x",
-            "  input (~44M turns) — the measured sweet spot between",
-            "  amortizing the fixed per-job driver cost (~3s warm; argues",
-            "  bigger) and the host's shared DRAM-bandwidth ceiling that a",
-            "  retired round-4 ~58M-turn variant pushed the 16-thread",
-            "  config into (argues smaller); host noise is carried to",
-            "  steady state by best_observed across BENCH_HISTORY",
-            "- single-box caveat: at this input size the 16-thread config",
-            "  presses the host's shared DRAM bandwidth (an Amdahl fit on",
-            "  the pair shows the non-scaling component growing with input",
-            "  while per-core CPU work scales cleanly. A real cluster adds",
-            "  memory channels with every executor node; local[] cannot,",
-            "  so the wide pair UNDERSTATES multi-node scaling the same way",
-            "  a single shared disk would without the tmpfs shuffle/lake)",
-            "- round-5 event-log forensics (tools/wide_knobs.py evlog +",
-            "  tools/stage_times.py) pins the residual gap: the dominant",
-            "  parse->route->write stage is perfectly BALANCED (max task ==",
-            "  stage wall, no straggler), tasks are ~93% on-CPU with no GC",
-            "  or fetch-wait pathology, and per-row CPU inflates ~1.6x when",
-            "  16 tasks run concurrently vs 4 — shared DRAM/LLC contention",
-            "  counted as CPU time, the one resource local[] cannot add",
-            "  with width; driver plan time is <1s warm and job gaps <2s",
-        ]
-    elif pw.get("error"):
-        lines += ["", f"- wide scaling pair failed: {pw['error']}"]
-    elif pw.get("skipped"):
-        lines += ["", f"- wide scaling pair skipped: {pw['skipped']}"]
+    if "queries_error" in result:
+        lines.append(f"- error: {result['queries_error']}")
+    for tag, (n, n4, scale) in PAIRS.items():
+        p = result["pairs"][tag]
+        lines.append(f"\n## Pipeline pair {tag}: local[{n}] vs local[{n4}] "
+                     f"on {scale}\n")
+        if "skipped" in p:
+            lines.append(f"- skipped: {p['skipped']}")
+            continue
+        if "eff" in p:
+            lines += [
+                f"- input: {p['turns']} turns; {p['n_rounds']} interleaved "
+                f"rounds (ABBA)", "",
+                "| side | median wall s | runs s | turns/s |",
+                "|---|---|---|---|",
+                f"| local[{n}] | {p['t_n_sec']} | {p['runs_n_sec']} | "
+                f"{p['turns_per_sec_n']} |",
+                f"| local[{n4}] | {p['t_4n_sec']} | {p['runs_4n_sec']} | "
+                f"{p['turns_per_sec_4n']} |",
+                "",
+                f"- efficiency (T_N / T_4N) / {n4 // n} per round: "
+                f"{p['effs']}; median **{p['eff']}**, IQR {p['eff_iqr']}",
+                f"- stages of the median local[{n}] run: {p['stages_n']}",
+                f"- stages of the median local[{n4}] run: {p['stages_4n']}",
+            ]
+        if "error" in p:
+            lines.append(f"- error: {p['error']}")
     with open(os.path.join(REPO, "BENCH.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
 
 
-def _parse_argv(argv: list[str]) -> dict[str, str]:
-    out = {}
-    i = 0
-    while i < len(argv):
-        if argv[i].startswith("--"):
-            key = argv[i][2:]
-            if i + 1 < len(argv) and not argv[i + 1].startswith("--"):
-                out[key] = argv[i + 1]
-                i += 2
-            else:
-                out[key] = ""
-                i += 1
-        else:
-            i += 1
-    return out
+def main() -> int:
+    t_start = time.perf_counter()
+    nproc = len(os.sched_getaffinity(0))
+    print(json.dumps({"swept_orphan_pids": _sweep_orphans(),
+                      "purged_stale_inputs": _purge_stale_inputs()}), flush=True)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    name = os.path.basename(sf_dir.rstrip("/"))
+    host = {"nproc": nproc, "mem_total_gb": _mem_total_gb()}
+    result: dict = {
+        "metric": "headline_queries_total_sec", "value": None, "unit": "sec",
+        "sf": float(name[2:]) if name.startswith("sf") else None,
+        "queries": {}, "host": host, "pairs": select_pairs(nproc),
+    }
+    try:
+        result["queries"], facts = measure_queries(sf_dir)
+        result["value"] = round(sum(result["queries"].values()), 3)
+        host.update(facts)
+    except (WorkerError, OSError) as exc:
+        result["queries_error"] = str(exc)
+    print(json.dumps(result), flush=True)  # partial: survives a phase-B crash
+
+    for tag, (n, n4, scale) in PAIRS.items():
+        if result["pairs"][tag] is None:
+            result["pairs"][tag] = measure_pair(tag, n, n4, scale, host)
+            print(json.dumps({tag: result["pairs"][tag]}), flush=True)
+    if "local_dir" in host:
+        host["local_dir_fs"] = _fs_type(host["local_dir"])
+    result["wall_sec"] = round(time.perf_counter() - t_start, 1)
+    write_reports(result)
+    print(json.dumps(compact(result)), flush=True)
+    return 0
 
 
 if __name__ == "__main__":
-    opts = _parse_argv(sys.argv[1:])
-    mode = opts.get("worker")
-    if mode == "queries":
-        worker_queries(opts["sf-dir"], int(opts["cpus"]), opts["out"])
-        sys.exit(0)
-    elif mode == "pipeline":
-        worker_pipeline(int(opts["cores"]), opts["raw"], opts.get("warm", ""),
-                        opts["out"],
-                        budget=float(opts.get("budget", "240")))
-        sys.exit(0)
-    sys.exit(main())
+    if sys.argv[1:3] == ["--worker", "queries"]:
+        worker_queries(sys.argv[3])
+    elif sys.argv[1:3] == ["--worker", "pipeline"]:
+        worker_pipeline(int(sys.argv[3]), sys.argv[4])
+    else:
+        sys.exit(main())

@@ -20,8 +20,6 @@ subsumed by a kept entry — and which already carry two driver-green rounds
   dd5               -> (round 5, making room for tx5) SimHash signatures
                        consumed and hash-verified by dd8's band pairs —
                        the same subsumption rationale as dd3 -> dd4
-  dd7               -> identical query+oracle to dd6 now that cc_bigstar is
-                       dd6's default kernel
   sim2/sim3/sim4    -> LSH signatures/bucket-stats/norms consumed by sim5/sim7
   sim6              -> IVF assignment consumed by sim8 (same scored CTE)
 

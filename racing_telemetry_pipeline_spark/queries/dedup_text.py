@@ -722,8 +722,8 @@ def dd6_dedup_clusters(spark, sf_dir):
     O(log^2 n)-round scale path — so a user reaching for "the" dedup
     clustering op gets the kernel that survives 10^12 edges. cc_minlabel
     (O(diameter) rounds) remains as the independently property-tested
-    alternative; tests/test_cc_bigstar.py asserts node-level equality of
-    the two on the real corpus, and tests/test_graph_cc.py property-tests
+    alternative; tests/test_cc_bigstar.py asserts that the two give the
+    same clusters on the real corpus, and tests/test_graph_cc.py property-tests
     both against a union-find oracle."""
     from ..operators.graph import cc_bigstar
 
@@ -759,20 +759,6 @@ FROM labels GROUP BY cluster_id
 """
 
 
-def dd7_cc_bigstar(spark, sf_dir):
-    """Near-dup clusters via alternating large-star / small-star rounds
-    (operators/graph.py cc_bigstar): each round is two co-partitioned
-    groupBy/join pairs on node id and the edge set contracts in
-    O(log^2 n) rounds. Since round 3 this is also dd6's default kernel,
-    so this entry is redundant with dd6 and rotates out of the curated
-    driver window (still exercised by tests/test_cc_bigstar.py and
-    property-tested vs a union-find oracle in tests/test_graph_cc.py).
-    """
-    from ..operators.graph import cc_bigstar
-
-    return _cluster_rollup(cc_bigstar(_candidate_edges(spark, sf_dir)))
-
-
 QUERIES = {
     "dd1_exact_dedup": (dd1_exact_dedup, DD1_SQL),
     "dd2_ngram_jaccard_pairs": (dd2_ngram_jaccard_pairs, DD2_SQL),
@@ -786,6 +772,4 @@ QUERIES = {
     "tx4_fingerprint": (tx4_fingerprint, TX4_SQL),
     "tx5_length_quantiles": (tx5_length_quantiles, TX5_SQL),
     "dd6_dedup_clusters": (dd6_dedup_clusters, DD6_SQL),
-    # same clusters, same oracle — different (scale-path) algorithm
-    "dd7_cc_bigstar": (dd7_cc_bigstar, DD6_SQL),
 }

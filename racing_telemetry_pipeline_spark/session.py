@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """A quarter of RAM, at least 1g: in local mode the driver heap also
+    holds every executor's memory, and several sessions may share a host."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{max(1, kb // 4 // 2**20)}g"
+
+
 def get_spark(
     app_name: str = "racing_telemetry_pipeline_spark",
     cores: int | None = None,
@@ -57,7 +65,10 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # shuffle/spill files: tmpfs when available. The sandbox's lone
         # disk is a SHARED serial resource — shuffle I/O through it caps
         # multi-core scaling no matter how well the compute parallelizes.

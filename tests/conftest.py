@@ -10,7 +10,7 @@ from racing_telemetry_pipeline_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", cores=8, shuffle_partitions=8)
+    s = get_spark("pytest", shuffle_partitions=8)
     yield s
 
 

@@ -1,12 +1,15 @@
-"""Large-star/small-star connected components (dd7) must produce exactly
-the clusters the min-label propagation (dd6) does — on the real testdata
-corpus and on the adversarial hot-shingle fixture."""
+"""dd6's large-star/small-star connected components (cc_bigstar) must
+produce exactly the clusters min-label propagation (cc_minlabel) does on the
+real testdata corpus, and the known cluster on the adversarial hot-shingle
+fixture."""
 
 from __future__ import annotations
 
+from racing_telemetry_pipeline_spark.operators.graph import cc_minlabel
 from racing_telemetry_pipeline_spark.queries.dedup_text import (
+    _candidate_edges,
+    _cluster_rollup,
     dd6_dedup_clusters,
-    dd7_cc_bigstar,
 )
 
 SF = "/root/testdata/sf0.01"
@@ -20,7 +23,7 @@ def _clusters(df):
 
 def test_bigstar_equals_minlabel(spark):
     a = _clusters(dd6_dedup_clusters(spark, SF))
-    b = _clusters(dd7_cc_bigstar(spark, SF))
+    b = _clusters(_cluster_rollup(cc_minlabel(_candidate_edges(spark, SF))))
     assert a == b
     assert a, "expected at least one near-dup cluster in testdata"
 
@@ -46,6 +49,4 @@ def test_bigstar_on_hot_shingle_fixture(spark, tmp_path_factory):
         }
     )
     pq.write_table(tbl, str(d / "documents.parquet"))
-    a = _clusters(dd6_dedup_clusters(spark, str(d)))
-    b = _clusters(dd7_cc_bigstar(spark, str(d)))
-    assert a == b == {(10, 3, 10, 12)}
+    assert _clusters(dd6_dedup_clusters(spark, str(d))) == {(10, 3, 10, 12)}

@@ -55,7 +55,7 @@ def test_spark_submit_py_files_launch(submit_workdir):
 
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # imports must come from the zip
-    env["SPARK_DRIVER_MEMORY"] = "4g"  # tiny input; don't grab the bench's 48g
+    env["SPARK_DRIVER_MEMORY"] = "4g"  # tiny input; a fixed heap, not the MemTotal/4 default
 
     proc = subprocess.run(
         [

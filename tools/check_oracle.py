@@ -48,7 +48,7 @@ def main():
     from racing_telemetry_pipeline_spark.queries import all_queries_full
     from racing_telemetry_pipeline_spark.session import get_spark
 
-    spark = get_spark("check_oracle", cores=16, shuffle_partitions=16)
+    spark = get_spark("check_oracle")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

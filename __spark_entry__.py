@@ -3,8 +3,8 @@
 ``entry(spark)`` — flagship log-pipeline query (route fan-out counts) at
 sf0.001. ``queries()`` — the CURATED 50-entry window (the driver records
 exactly 50 CORRECTNESS rows): one entry per implemented operator
-(SURVEY.md §2) and per LLM-pipeline op; redundant twins live in
-``rotated_queries()`` and are verified by tools/check_oracle.py.
+(SURVEY.md §2) and per LLM-pipeline op; the building blocks outside it
+are in ``all_queries_full()`` and verified by tools/check_oracle.py.
 ``oracle_sql()`` — matching DuckDB SQL with identical column names.
 """
 

@@ -1,21 +1,16 @@
-"""Distributed connected-components kernels over an edge DataFrame.
+"""Distributed connected components over an edge DataFrame.
 
-Two interchangeable implementations (identical output labels):
+``cc_bigstar``: alternating large-star / small-star rounds (Kiveris et al.,
+"Connected Components in MapReduce and Beyond") — O(log^2 n) rounds, every
+step a co-partitioned groupBy/join on node id, no state besides the
+contracting edge set. The 10^12-edge scale path and the kernel behind
+dd6_dedup_clusters and sim10_embedding_dedup_clusters.
+tests/test_graph_cc.py property-tests it against a pure-Python union-find.
 
-- ``cc_minlabel``: iterative min-label propagation — simple, O(diameter)
-  rounds, carries a full label table through every round. Fine for the
-  blocked near-dup graphs the dedup pipeline produces (small components);
-  kept as the independently-implemented cross-check kernel.
-- ``cc_bigstar``: alternating large-star / small-star rounds (Kiveris et
-  al., "Connected Components in MapReduce and Beyond") — O(log^2 n)
-  rounds, every step a co-partitioned groupBy/join on node id, no state
-  besides the contracting edge set. The 10^12-edge scale path and (since
-  round 3) the default kernel in dd6_dedup_clusters.
-
-Both raise ``ConvergenceError`` instead of silently returning unconverged
+It raises ``ConvergenceError`` instead of silently returning unconverged
 (wrong) labels when max_rounds is exhausted before the fixpoint.
 
-Both take an edge DataFrame with integer columns (src, dst) and return
+It takes an edge DataFrame with integer columns (src, dst) and returns
 (doc_id, cluster_id) with cluster_id = min node id of the component.
 Nodes not present in any edge are absent from the result (callers treat
 them as singletons). ``localCheckpoint`` truncates lineage each round —
@@ -38,56 +33,11 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
 
 
 class ConvergenceError(RuntimeError):
-    """A CC kernel exhausted max_rounds before reaching its fixpoint.
+    """The CC kernel exhausted max_rounds before reaching its fixpoint.
 
     Returning the unconverged labels silently would yield WRONG clusters
-    (min-label needs O(diameter) rounds, so a near-dup chain longer than
-    max_rounds docs would split); failing loudly is the only safe exit."""
-
-
-def cc_minlabel(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
-    """Min-label propagation to a fixpoint."""
-    sym = _symmetrize(edges).cache()
-    labels = (
-        sym.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    converged = False
-    for _ in range(max_rounds):
-        neigh = (
-            sym.join(labels, sym.dst == labels.doc_id)
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("neigh_min"))
-        )
-        updated = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("neigh_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-            )
-        ).localCheckpoint()
-        changed = (
-            updated.alias("u")
-            .join(labels.alias("l"), "doc_id")
-            .filter(F.col("u.cluster_id") != F.col("l.cluster_id"))
-            .count()
-        )
-        labels = updated
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise ConvergenceError(
-            f"cc_minlabel: no fixpoint after {max_rounds} rounds "
-            "(component diameter exceeds max_rounds; raise max_rounds or "
-            "use cc_bigstar)"
-        )
-    return labels
+    (a component whose edges have not contracted to a star would split);
+    failing loudly is the only safe exit."""
 
 
 def _min_neighbor(df: DataFrame) -> DataFrame:

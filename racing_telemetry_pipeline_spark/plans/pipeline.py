@@ -124,29 +124,27 @@ def run_pipeline(
     settings: PipelineSettings = DEFAULTS,
     parse_engine: str = "pandas_udf",
     resume: bool = True,
-    stop_after: str | None = None,
     approx_percentiles: bool = False,
 ) -> PipelineResult:
     """Run (or resume) the full pipeline; each lake table is a resume point.
 
     ``resume=True`` skips any stage whose output manifest records the same
-    input snapshot (Iceberg-snapshot semantics over the parquet lake).
-    ``stop_after`` simulates a mid-run failure for resume tests.
+    input snapshot and whose tables all exist (Iceberg-snapshot semantics
+    over the parquet lake). ``timings`` holds one wall per stage that ran.
     """
     lake = Lake(spark, lake_root)
     res = PipelineResult(lake_root=lake_root)
     res.input_snapshot = lake.fingerprint_input(raw_path)
 
-    def stage(name: str, fn, input_snapshot: str, tables: list[str]) -> bool:
+    def stage(name: str, fn, input_snapshot: str, tables: list[str]) -> None:
         if resume and lake.stage_current(name, input_snapshot):
             res.stages_skipped.append(name)
-            return False
+            return
         t0 = time.perf_counter()
         fn()
         lake.mark_stage(name, input_snapshot, tables)
         res.timings[name] = time.perf_counter() - t0
         res.stages_run.append(name)
-        return True
 
     # -- stage 1-4 fused: routed table (partitioned by route = the fan-out) --
     def build_routed():
@@ -186,14 +184,7 @@ def run_pipeline(
         lake.record_stage_metrics("routed", res.observed_metrics)
         lake.register_sink_aliases("routed", "route", list(settings.sinks))
 
-    stage(
-        "routed",
-        build_routed,
-        res.input_snapshot,
-        ["routed"],
-    )
-    if stop_after == "routed":
-        return res
+    stage("routed", build_routed, res.input_snapshot, ["routed"])
     routed_snapshot = lake.snapshot_id("routed") or ""
 
     # -- drift-calibration audit table (A1-A3 analog) --
@@ -289,41 +280,17 @@ def run_pipeline(
             ),
         )
 
-    # drift and the aggregates are independent scans of the routed table;
-    # overlapping their jobs hides per-job scheduling latency (this fixed
-    # serial cost was the scaling-efficiency ceiling at small inputs)
-    if stop_after == "drift_calibration":
-        stage(
-            "drift_calibration", build_drift, routed_snapshot, ["drift_calibration"]
-        )
-        return res
-
-    def both():
-        drift_needed = not (resume and lake.stage_current("drift_calibration", routed_snapshot))
-        agg_needed = not (resume and lake.stage_current("aggregates", routed_snapshot))
-        lineage_needed = not (resume and lake.stage_current("lineage", routed_snapshot))
-        fns = []
-        if agg_needed:
-            # aggs first (contains the critical-path role-latency chain)
-            fns.append(build_aggs)
-        if drift_needed:
-            fns.append(build_drift)
-        if lineage_needed:
-            fns.append(
-                lambda: _write_lineage(spark, lake, "routed", res.input_snapshot)
-            )
-        _concurrently(*fns)
-        return drift_needed, agg_needed, lineage_needed
-
-    t0 = time.perf_counter()
-    drift_ran, aggs_ran, lineage_ran = both()
-    dt = time.perf_counter() - t0
-    for name, ran, tables in (
-        ("drift_calibration", drift_ran, ["drift_calibration"]),
-        ("lineage", lineage_ran, ["lineage_routed", "metrics_routed"]),
-        (
+    # drift, lineage and the aggregates are independent scans of the routed
+    # table; overlapping their jobs hides per-job scheduling latency (this
+    # fixed serial cost was the scaling-efficiency ceiling at small inputs).
+    # Each is its own resumable stage with its own wall, so the overlapping
+    # walls do not add up to the block's. Aggregates go first: they hold the
+    # critical-path role-latency chain.
+    _concurrently(
+        lambda: stage(
             "aggregates",
-            aggs_ran,
+            build_aggs,
+            routed_snapshot,
             [
                 "agg_sink_counts",
                 "agg_turns_per_conversation",
@@ -331,13 +298,16 @@ def run_pipeline(
                 "agg_role_latency",
             ],
         ),
-    ):
-        if ran:
-            lake.mark_stage(name, routed_snapshot, tables)
-            res.stages_run.append(name)
-            res.timings[name] = dt
-        else:
-            res.stages_skipped.append(name)
+        lambda: stage(
+            "drift_calibration", build_drift, routed_snapshot, ["drift_calibration"]
+        ),
+        lambda: stage(
+            "lineage",
+            lambda: _write_lineage(spark, lake, "routed", res.input_snapshot),
+            routed_snapshot,
+            ["lineage_routed", "metrics_routed"],
+        ),
+    )
     return res
 
 
@@ -345,11 +315,6 @@ def _concurrently(*fns) -> None:
     """Run driver-side thunks in parallel threads (Spark jobs overlap)."""
     import concurrent.futures as cf
 
-    if not fns:
-        return
-    if len(fns) == 1:
-        fns[0]()
-        return
     with cf.ThreadPoolExecutor(max_workers=len(fns)) as ex:
         futures = [ex.submit(fn) for fn in fns]
         for f in futures:

@@ -708,26 +708,19 @@ def _candidate_edges(spark, sf_dir):
     )
 
 
-def _cluster_rollup(labels):
-    return labels.groupBy("cluster_id").agg(
+def dd6_dedup_clusters(spark, sf_dir):
+    """Near-dup clusters: connected components of the candidate-pair graph
+    via the large-star / small-star rounds of operators/graph.py cc_bigstar
+    — the O(log^2 n)-round kernel that survives 10^12 edges.
+    tests/test_cc_bigstar.py checks its clusters against a pure-Python
+    union-find over the same candidate edges on the real corpus."""
+    from ..operators.graph import cc_bigstar
+
+    return cc_bigstar(_candidate_edges(spark, sf_dir)).groupBy("cluster_id").agg(
         F.count("*").alias("n_docs"),
         F.min("doc_id").alias("min_doc"),
         F.max("doc_id").alias("max_doc"),
     )
-
-
-def dd6_dedup_clusters(spark, sf_dir):
-    """Near-dup clusters. Default kernel (round-3 change): the alternating
-    large-star / small-star rounds of operators/graph.py cc_bigstar — the
-    O(log^2 n)-round scale path — so a user reaching for "the" dedup
-    clustering op gets the kernel that survives 10^12 edges. cc_minlabel
-    (O(diameter) rounds) remains as the independently property-tested
-    alternative; tests/test_cc_bigstar.py asserts that the two give the
-    same clusters on the real corpus, and tests/test_graph_cc.py property-tests
-    both against a union-find oracle."""
-    from ..operators.graph import cc_bigstar
-
-    return _cluster_rollup(cc_bigstar(_candidate_edges(spark, sf_dir)))
 
 
 DD6_SQL = f"""

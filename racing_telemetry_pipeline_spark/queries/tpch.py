@@ -8,7 +8,6 @@ source values make the casts boundary-safe).
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .common import t, t_fanout
@@ -125,57 +124,6 @@ GROUP BY n_name
 """
 
 
-# --- top-K per group (ranking window; best-lap analog) ------------------------
-# ref: best-lap selection /root/reference/src/schemas/features.py:81-130
-def o1_topk_orders_per_priority(spark, sf_dir):
-    orders = t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        orders.withColumn("rank_in_priority", F.row_number().over(w))
-        .filter(F.col("rank_in_priority") <= 3)
-        .select("o_orderpriority", "rank_in_priority", "o_orderkey", "o_totalprice")
-    )
-
-
-O1_SQL = """
-SELECT o_orderpriority, rank_in_priority, o_orderkey, o_totalprice
-FROM (
-  SELECT o_orderpriority, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY o_orderpriority
-                            ORDER BY o_totalprice DESC, o_orderkey) AS rank_in_priority
-  FROM orders
-)
-WHERE rank_in_priority <= 3
-"""
-
-
-# --- anti/semi join (exists-style routing) ------------------------------------
-def j3_customers_without_orders(spark, sf_dir):
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_customers"),
-            F.round(F.sum(F.col("c_acctbal").cast(_DEC)).cast("double"), 2).alias(
-                "sum_acctbal"
-            ),
-        )
-    )
-
-
-J3_SQL = """
-SELECT c_mktsegment, count(*) AS n_customers,
-       round(cast(sum(cast(c_acctbal as decimal(24,6))) as double), 2) AS sum_acctbal
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY c_mktsegment
-"""
-
-
 # --- A4 baseline-stats analog: per-group coverage/span ------------------------
 # ref: /root/reference/tools/compute_baseline.py:31-76
 def a4_order_baseline_stats(spark, sf_dir):
@@ -204,110 +152,9 @@ FROM orders GROUP BY o_orderstatus
 """
 
 
-
-
-# --- rollup / grouping sets ---------------------------------------------------
-def a10_rollup_revenue(spark, sf_dir):
-    li = t(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum(F.col("l_extendedprice").cast(_DEC)).cast("double"), 2)
-            .alias("sum_price"),
-            F.grouping_id().alias("grouping_level"),
-        )
-    )
-
-
-A10_SQL = """
-SELECT l_returnflag, l_linestatus, count(*) AS n,
-       round(cast(sum(cast(l_extendedprice as decimal(24,6))) as double), 2) AS sum_price,
-       grouping(l_returnflag) * 2 + grouping(l_linestatus) AS grouping_level
-FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
-# --- Q6: forecast revenue change (pure pushdown filter + single agg) ---------
-def q6_forecast_revenue(spark, sf_dir):
-    li = t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= "1997-01-01")
-            & (F.col("l_shipdate") < "1998-01-01")
-            & (F.col("l_discount") >= 0.02)
-            & (F.col("l_discount") <= 0.08)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * F.col("l_discount")).cast(_DEC)
-                ).cast("double"),
-                2,
-            ).alias("revenue"),
-            F.count("*").alias("n_rows"),
-        )
-    )
-
-
-Q6_SQL = """
-SELECT round(cast(sum(cast(l_extendedprice * l_discount as decimal(24,6))) as double), 2) AS revenue,
-       count(*) AS n_rows
-FROM lineitem
-WHERE l_shipdate >= timestamp '1997-01-01' AND l_shipdate < timestamp '1998-01-01'
-  AND l_discount >= 0.02 AND l_discount <= 0.08 AND l_quantity < 24
-"""
-
-
-# --- Q18-style: large-volume customers (agg -> having -> join back) ----------
-Q18_MIN_QTY = 250
-
-
-def q18_large_volume_customers(spark, sf_dir):
-    li = t(spark, sf_dir, "lineitem")
-    orders = t(spark, sf_dir, "orders")
-    cust = t(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.round(F.sum(F.col("l_quantity").cast(_DEC)).cast("double"), 2)
-             .alias("total_qty"))
-        .filter(F.col("total_qty") > Q18_MIN_QTY)
-    )
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .select(
-            F.col("c_name"),
-            F.col("o_orderkey"),
-            F.col("o_orderdate"),
-            F.col("total_qty"),
-        )
-    )
-
-
-Q18_SQL = f"""
-SELECT c_name, o_orderkey, o_orderdate, total_qty
-FROM (
-  SELECT l_orderkey,
-         round(cast(sum(cast(l_quantity as decimal(24,6))) as double), 2) AS total_qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING round(cast(sum(cast(l_quantity as decimal(24,6))) as double), 2) > {Q18_MIN_QTY}
-) big
-JOIN orders ON big.l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-"""
-
-
 QUERIES = {
     "q1_pricing_summary": (q1_pricing_summary, Q1_SQL),
-    "q6_forecast_revenue": (q6_forecast_revenue, Q6_SQL),
-    "q18_large_volume_customers": (q18_large_volume_customers, Q18_SQL),
     "q3_top_orders": (q3_top_orders, Q3_SQL),
     "q5_region_revenue": (q5_region_revenue, Q5_SQL),
-    "o1_topk_orders_per_priority": (o1_topk_orders_per_priority, O1_SQL),
-    "j3_customers_without_orders": (j3_customers_without_orders, J3_SQL),
     "a4_order_baseline_stats": (a4_order_baseline_stats, A4_SQL),
-    "a10_rollup_revenue": (a10_rollup_revenue, A10_SQL),
 }

@@ -187,27 +187,13 @@ class Lake:
         partition_by: list[str] | None = None,
         input_snapshot: str = "",
         sort_within: list[str] | None = None,
-        range_by: list[str] | None = None,
-        range_partitions: int | None = None,
     ) -> str:
         """Write a table (overwrite) and record its layout in the manifest.
 
-        ``range_by`` range-repartitions on the given keys before the write:
-        each output file then covers a disjoint key range, so parquet
-        min/max footer stats let key-scoped scans skip whole files — the
-        flat-file stand-in for Iceberg's sort-order/Z-order file clustering
-        (at 100 TB a conv-scoped read touches a handful of files instead
-        of every file of the partition). ``sort_within`` controls in-file
-        row order; both are recorded so compact() preserves them.
+        ``sort_within`` controls in-file row order; it is recorded so
+        compact() preserves it.
         """
         path = self.table_path(name)
-        if range_by:
-            # explicit count pins the file count (AQE coalesces an
-            # unspecified range exchange down to one file on small data)
-            if range_partitions:
-                df = df.repartitionByRange(range_partitions, *range_by)
-            else:
-                df = df.repartitionByRange(*range_by)
         if sort_within:
             df = df.sortWithinPartitions(*sort_within)
         if self.catalog:
@@ -229,7 +215,6 @@ class Lake:
                 "written_at": time.time(),
                 "partition_by": partition_by or [],
                 "sort_within": sort_within or [],
-                "range_by": range_by or [],
             }
             self._save_manifest(m)
         return path
@@ -362,20 +347,16 @@ class Lake:
         entry = self._load_manifest()["tables"].get(name, {})
         partition_by = entry.get("partition_by") or None
         sort_within = entry.get("sort_within") or None
-        range_by = entry.get("range_by") or None
         tmp = path + "__compacting"
         old = path + "__old"
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(old, ignore_errors=True)
         # repartition, not coalesce: coalesce(n) also caps the READ
         # parallelism of the rewrite, so compacting a large table would run
-        # on n tasks end-to-end. The recorded range/sort layout is
-        # re-applied — compaction must not destroy the file-clustering and
-        # in-file order the original write established (O2 contract).
-        if range_by:
-            df = df.repartitionByRange(int(n_files), *range_by)
-        else:
-            df = df.repartition(int(n_files))
+        # on n tasks end-to-end. The recorded sort order is re-applied —
+        # compaction must not destroy the in-file order the original write
+        # established (O2 contract).
+        df = df.repartition(int(n_files))
         if sort_within:
             df = df.sortWithinPartitions(*sort_within)
         writer = df.write.mode("overwrite")

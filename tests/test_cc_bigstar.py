@@ -1,16 +1,16 @@
 """dd6's large-star/small-star connected components (cc_bigstar) must
-produce exactly the clusters min-label propagation (cc_minlabel) does on the
-real testdata corpus, and the known cluster on the adversarial hot-shingle
-fixture."""
+produce exactly the clusters a pure-Python union-find gives over the same
+candidate edges of the real testdata corpus, and the known cluster on the
+adversarial hot-shingle fixture."""
 
 from __future__ import annotations
 
-from racing_telemetry_pipeline_spark.operators.graph import cc_minlabel
 from racing_telemetry_pipeline_spark.queries.dedup_text import (
     _candidate_edges,
-    _cluster_rollup,
     dd6_dedup_clusters,
 )
+
+from .test_graph_cc import _union_find
 
 SF = "/root/testdata/sf0.01"
 
@@ -21,11 +21,14 @@ def _clusters(df):
     }
 
 
-def test_bigstar_equals_minlabel(spark):
-    a = _clusters(dd6_dedup_clusters(spark, SF))
-    b = _clusters(_cluster_rollup(cc_minlabel(_candidate_edges(spark, SF))))
-    assert a == b
-    assert a, "expected at least one near-dup cluster in testdata"
+def test_bigstar_equals_union_find(spark):
+    edges = [(r.src, r.dst) for r in _candidate_edges(spark, SF).collect()]
+    members: dict[int, list[int]] = {}
+    for doc, cluster in _union_find(edges).items():
+        members.setdefault(cluster, []).append(doc)
+    want = {(c, len(ds), min(ds), max(ds)) for c, ds in members.items()}
+    assert _clusters(dd6_dedup_clusters(spark, SF)) == want
+    assert want, "expected at least one near-dup cluster in testdata"
 
 
 def test_bigstar_on_hot_shingle_fixture(spark, tmp_path_factory):

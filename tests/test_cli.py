@@ -51,4 +51,4 @@ def test_cli_query_unknown_name_lists_registry(spark, capsys):
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert res["error"] == "unknown query"
     assert "q1_pricing_summary" in res["available"]
-    assert len(res["available"]) >= 60
+    assert len(res["available"]) == 57  # the full registry, not the 50-entry window

@@ -4,6 +4,7 @@ equality, resume idempotence, skew salting (FIXTURES.md §5)."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -87,35 +88,55 @@ def test_drift_calibration(lake_small, oracle_small):
     )
 
 
+POST_ROUTED = {
+    "drift_calibration": ["drift_calibration"],
+    "lineage": ["lineage_routed", "metrics_routed"],
+    "aggregates": [
+        "agg_sink_counts",
+        "agg_turns_per_conversation",
+        "agg_tool_frequency",
+        "agg_role_latency",
+    ],
+}
+
+
+def _newest_mtime(path):
+    return max(
+        os.path.getmtime(os.path.join(dp, f))
+        for dp, _, fs in os.walk(path)
+        for f in fs
+    )
+
+
 def test_resume_idempotent(spark, raw_unit, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("lake_resume"))
-    # simulate failure after first stage, then resume
-    r1 = run_pipeline(spark, raw_unit, root, stop_after="routed")
-    assert r1.stages_run == ["routed"]
+    r1 = run_pipeline(spark, raw_unit, root)
+    assert set(r1.stages_run) == {"routed", *POST_ROUTED}
+    assert set(r1.timings) == set(r1.stages_run)
     routed_dir = os.path.join(root, "routed")
-    mtime_before = max(
-        os.path.getmtime(os.path.join(dp, f))
-        for dp, _, fs in os.walk(routed_dir)
-        for f in fs
-    )
+    mtime_before = _newest_mtime(routed_dir)
+
+    # crash after the routed stage: the post-routed tables never landed
+    for tables in POST_ROUTED.values():
+        for t in tables:
+            shutil.rmtree(os.path.join(root, t))
     r2 = run_pipeline(spark, raw_unit, root)
-    assert "routed" in r2.stages_skipped  # stage 1 NOT recomputed
-    assert set(r2.stages_run) == {"drift_calibration", "aggregates", "lineage"}
-    # third run with nothing changed: every stage skipped
+    assert r2.stages_skipped == ["routed"]  # stage 1 NOT recomputed
+    assert set(r2.stages_run) == set(POST_ROUTED)
+    assert set(r2.timings) == set(r2.stages_run)
+    assert _newest_mtime(routed_dir) == mtime_before
+
+    # one lost table re-runs only the stage that owns it
+    shutil.rmtree(os.path.join(root, "lineage_routed"))
     r3 = run_pipeline(spark, raw_unit, root)
-    assert r3.stages_run == []
-    assert set(r3.stages_skipped) == {
-        "routed",
-        "drift_calibration",
-        "aggregates",
-        "lineage",
-    }
-    mtime_after = max(
-        os.path.getmtime(os.path.join(dp, f))
-        for dp, _, fs in os.walk(routed_dir)
-        for f in fs
-    )
-    assert mtime_before == mtime_after
+    assert r3.stages_run == ["lineage"]
+    assert set(r3.timings) == {"lineage"}
+
+    # nothing changed: every stage skipped
+    r4 = run_pipeline(spark, raw_unit, root)
+    assert r4.stages_run == [] and r4.timings == {}
+    assert set(r4.stages_skipped) == {"routed", *POST_ROUTED}
+    assert _newest_mtime(routed_dir) == mtime_before
 
     # full fresh run produces identical sink contents
     root2 = str(tmp_path_factory.mktemp("lake_fresh"))
@@ -149,7 +170,6 @@ def test_lineage_guard_catches_duplicate_part_file(spark, lake_small, tmp_path):
     table exceed the count observe() captured during the write, and the
     lineage stage must refuse it."""
     import glob
-    import shutil
 
     from racing_telemetry_pipeline_spark.plans.pipeline import _write_lineage
 

@@ -72,47 +72,6 @@ def test_snapshot_ids_change_on_rewrite(spark, raw_unit, tmp_path):
     assert s1 and s2 and s1 != s2
 
 
-def test_range_clustered_write_and_compact(spark, raw_unit, tmp_path):
-    """range_by writes give each file a disjoint key range (parquet
-    min/max footer stats then skip whole files for key-scoped scans —
-    the flat-file stand-in for Iceberg sort-order clustering), and
-    compact() re-applies the recorded range/sort layout."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    lake = Lake(spark, str(tmp_path / "lakerange"))
-    df = spark.read.parquet(raw_unit).repartition(8)  # scramble
-    lake.write(df, "clustered", input_snapshot="x",
-               range_by=["conv_id"], sort_within=["conv_id", "turn_idx"],
-               range_partitions=6)
-
-    def file_ranges(path):
-        out = []
-        for f in sorted(glob.glob(f"{path}/*.parquet")):
-            md = pq.read_metadata(f)
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                col = md.row_group(rg).column(0)  # conv_id is first col
-                assert col.path_in_schema == "conv_id"
-                mins.append(col.statistics.min)
-                maxs.append(col.statistics.max)
-            out.append((min(mins), max(maxs)))
-        return out
-
-    ranges = file_ranges(lake.table_path("clustered"))
-    assert len(ranges) > 1
-    for (_lo, hi), (lo2, _hi2) in zip(ranges, ranges[1:]):
-        assert hi <= lo2, "file key ranges overlap — not range-clustered"
-
-    before = lake.read("clustered").count()
-    lake.compact("clustered", target_file_bytes=256 * 1024)
-    assert lake.read("clustered").count() == before
-    ranges2 = file_ranges(lake.table_path("clustered"))
-    for (_lo, hi), (lo2, _hi2) in zip(ranges2, ranges2[1:]):
-        assert hi <= lo2, "compaction destroyed the range clustering"
-
-
 def test_fingerprint_detects_content_rewrite(tmp_path):
     """Same file name + same size + different bytes => different snapshot
     id (resume must not skip stages on silently-changed data)."""

@@ -43,8 +43,8 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     filters = sys.argv[2:]
 
-    # the FULL registry (curated driver window + rotated entries), so a
-    # rotation out of the 50-row driver window never loses local verification
+    # the FULL registry (the curated 50-entry window plus the entries
+    # outside it), so leaving the window never loses local verification
     from racing_telemetry_pipeline_spark.queries import all_queries_full
     from racing_telemetry_pipeline_spark.session import get_spark
 

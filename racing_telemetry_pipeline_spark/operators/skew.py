@@ -11,15 +11,17 @@ implements turn-range sub-segmentation with boundary stitching:
    every window below runs within the bucket, so no task exceeds ~B rows
    per conversation;
 2. a per-(conv, bucket) summary (last/max ts, internal flag counts) is
-   aggregated WITHOUT re-shuffling (same partitioning), cross-bucket
-   state (previous bucket's last ts, prefix max ts, segment-id offsets)
-   is stitched with tiny windows over the summary, and broadcast-joined
-   back.
+   aggregated, cross-bucket state (previous bucket's last ts, prefix max
+   ts, segment-id offsets) is stitched with tiny windows over the
+   summary, and joined back.
 
 Produces byte-identical results to the unsalted chain
 (dedup_keep_last + add_time_flags + monotonic_repair); asserted in
-tests/test_skew.py. Cost when no skew exists: one summary agg + one
-broadcast join.
+tests/test_skew.py. Cost, with or without skew: column pruning gives the
+summary branch its own narrow re-scan of the input and its own exchange
+(in a ``batch_hot`` event log, two map stages each read every raw row),
+plus a tiny summary exchange and the stitch join's summary-side exchange
+(tests/test_plans.py::test_routed_plan_exchange_budget).
 """
 
 from __future__ import annotations
@@ -75,7 +77,9 @@ def salted_parse_sync(
         .withColumn("_rn_in", F.row_number().over(w_o))
     )
 
-    # --- per-(conv, bucket) summary: NO shuffle (same partitioning) ---
+    # --- per-(conv, bucket) summary: column pruning plans this branch as
+    # its own narrow re-scan of the input with its own exchange, not a
+    # reuse of the full-row exchange above ---
     flag_in = _flag(F.col("_prev_us_in"), F.col("_us"), gap_threshold_sec,
                     backwards_tolerance_sec)
     summ = df.groupBy(conv_col, BUCKET_COL).agg(

@@ -38,6 +38,7 @@ from ..operators.drift import drift_calibration
 from ..operators.routing import apply_sentinels, route_rows
 from ..operators.skew import salted_parse_sync
 from ..sources.lake import Lake
+from ..sources.parquet import path_version, read_parquet
 
 
 @dataclass
@@ -59,7 +60,9 @@ def _build_routed(
     """The fused parse->sync->enrich->route logical plan (lazy)."""
     from ..schemas import validate_raw
 
-    raw = validate_raw(spark.read.parquet(raw_path))
+    # the raw schema is inferred once per input snapshot (the fingerprint
+    # run_pipeline records) and validated as inferred on every call
+    raw = validate_raw(read_parquet(spark, raw_path, path_version(raw_path)))
     return routed_from_ordinal(spark, add_ingest_ordinal(raw), settings, parse_engine)
 
 

@@ -17,9 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.parquet import path_version, read_parquet
+
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    return read_parquet(spark, path, path_version(path))
 
 
 def t_fanout(spark: SparkSession, sf_dir: str, name: str,

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULTS
 from ..datagen import write_transcripts
 from ..plans.pipeline import _build_routed
+from ..sources.parquet import path_version, read_parquet
 
 _CACHE: dict[str, str] = {}
 
@@ -74,7 +75,7 @@ def _routed_cached(spark, engine: str):
     if not os.path.exists(os.path.join(d, "_SUCCESS")):
         routed = _build_routed(spark, _raw_dir(), DEFAULTS, parse_engine=engine)
         routed.write.mode("overwrite").parquet(d)
-    return spark.read.parquet(d)
+    return read_parquet(spark, d, path_version(d))
 
 
 def pipe1_routed(spark, sf_dir):

@@ -21,6 +21,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .parquet import _fingerprint_dir, read_parquet
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     try:
@@ -30,29 +32,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
-
-
-def _fingerprint_dir(path: str) -> str:
-    """Deterministic fingerprint of a table directory (names+sizes+mtimes).
-
-    Stands in for the Iceberg snapshot id; replaces the reference's input
-    SHA-256 manifest (/root/reference/src/utils/io_utils.py:24-41) without
-    re-reading data bytes.
-    """
-    h = hashlib.sha256()
-    for root, _dirs, files in sorted(os.walk(path)):
-        for f in sorted(files):
-            if f.startswith(("_", ".")):
-                continue
-            p = os.path.join(root, f)
-            st = os.stat(p)
-            # mtime_ns matters: a rewrite with identical names/sizes but
-            # different content must produce a NEW snapshot id, or resume
-            # would silently skip stages on changed data
-            h.update(
-                f"{os.path.relpath(p, path)}:{st.st_size}:{st.st_mtime_ns}".encode()
-            )
-    return h.hexdigest()[:16]
 
 
 class Lake:
@@ -174,6 +153,10 @@ class Lake:
             if int(batch_id) not in ids:
                 ids.append(int(batch_id))
             entry = m["tables"].setdefault(table, {})
+            # an appended batch changes the table, so a snapshot id left by
+            # compact() no longer names its contents (read() keys schema
+            # reuse on it)
+            entry.pop("snapshot_id", None)
             if partition_by and not entry.get("partition_by"):
                 entry["partition_by"] = partition_by
                 entry["written_at"] = time.time()
@@ -313,16 +296,19 @@ class Lake:
             return self.spark.table(self._ident(name))
         m = self._load_manifest()
         alias = m.get("aliases", {}).get(name)
-        self._recover_compact(alias["of_table"] if alias else name)
+        table = alias["of_table"] if alias else name
+        self._recover_compact(table)
+        snapshot = m["tables"].get(table, {}).get("snapshot_id")
         if alias is not None:
             # basePath keeps the partition column (e.g. route) in the
             # alias's schema — sink_* tables must satisfy the same routed
             # schema contract as the parent table, and consumers filter on
             # route
-            return self.spark.read.option(
-                "basePath", os.path.join(self.root, alias["of_table"])
-            ).parquet(os.path.join(self.root, alias["path"]))
-        return self.spark.read.parquet(self.table_path(name))
+            return read_parquet(
+                self.spark, os.path.join(self.root, alias["path"]), snapshot,
+                base_path=self.table_path(table),
+            )
+        return read_parquet(self.spark, self.table_path(name), snapshot)
 
     def compact(self, name: str, target_file_bytes: int = 128 * 1024 * 1024) -> int:
         """Rewrite a table into ~target-sized files (small-file compaction).
@@ -343,8 +329,8 @@ class Lake:
             if not f.startswith(("_", "."))
         )
         n_files = max(1, -(-total // target_file_bytes))
-        df = self.spark.read.parquet(path)
         entry = self._load_manifest()["tables"].get(name, {})
+        df = read_parquet(self.spark, path, entry.get("snapshot_id"))
         partition_by = entry.get("partition_by") or None
         sort_within = entry.get("sort_within") or None
         tmp = path + "__compacting"
@@ -403,6 +389,7 @@ class Lake:
                               ignore_errors=True)
             if drop:
                 m["stream_batches"][table] = ids[len(drop):]
+                m["tables"].get(table, {}).pop("snapshot_id", None)
                 self._save_manifest(m)
             return len(drop)
 

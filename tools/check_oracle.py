@@ -5,11 +5,16 @@ same sf dir, compares row count, sorted column names, and values
 (order-insensitive, stringified). Usage:
 
     python tools/check_oracle.py [sf_dir] [name_filter...]
+
+It also prints the run's per-session fixed costs: the wall, the classes
+Spark compiled and the parquet schema-inference jobs (jobs with a stage
+named ``parquet at ...``), so a change that brings them back shows.
 """
 
 from __future__ import annotations
 
 import sys
+import time
 
 sys.path.insert(0, ".")
 
@@ -39,6 +44,16 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="stable").reset_index(drop=True)
 
 
+def _inference_jobs(sc, group: str) -> int:
+    """Jobs of ``group`` that inferred a parquet schema."""
+    tracker = sc.statusTracker()
+    n = 0
+    for job in filter(None, map(tracker.getJobInfo, tracker.getJobIdsForGroup(group))):
+        stages = filter(None, map(tracker.getStageInfo, job.stageIds))
+        n += any(st.name.startswith("parquet at") for st in stages)
+    return n
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     filters = sys.argv[2:]
@@ -46,9 +61,11 @@ def main():
     # the FULL registry (the curated 50-entry window plus the entries
     # outside it), so leaving the window never loses local verification
     from racing_telemetry_pipeline_spark.queries import all_queries_full
-    from racing_telemetry_pipeline_spark.session import get_spark
+    from racing_telemetry_pipeline_spark.session import compiled_classes, get_spark
 
     spark = get_spark("check_oracle")
+    sc = spark.sparkContext
+    t0, compiled0, inference_jobs = time.perf_counter(), compiled_classes(spark), 0
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -65,6 +82,9 @@ def main():
         if name not in oracles:
             skipped.append(name)
             continue
+        # one job group per query: the status tracker retains only the
+        # last 1,000 jobs, so count each query's jobs right after it
+        sc.setJobGroup(f"check_oracle:{name}", name)
         try:
             got_raw = fn(spark, sf_dir).toPandas()
             want_raw = con.execute(oracles[name]).df()
@@ -72,6 +92,9 @@ def main():
         except Exception as e:
             fails.append((name, f"EXEC ERROR: {type(e).__name__}: {e}"))
             continue
+        finally:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            inference_jobs += _inference_jobs(sc, f"check_oracle:{name}")
         # Driver-gate faithfulness: the driver hashes str(value), so an
         # int64-vs-float64 dtype split ("123" vs "123.0") fails there even
         # though the %.10g canon below equates them. DuckDB integer sum()
@@ -106,7 +129,12 @@ def main():
             continue
         passes.append(name)
 
-    print(f"\nPASS ({len(passes)}): {' '.join(passes)}")
+    print(
+        f"\nwall {time.perf_counter() - t0:.1f} s, "
+        f"{compiled_classes(spark) - compiled0} classes compiled, "
+        f"{inference_jobs} schema-inference jobs"
+    )
+    print(f"PASS ({len(passes)}): {' '.join(passes)}")
     if skipped:
         print(f"NO-ORACLE rows-only ({len(skipped)}): {' '.join(skipped)}")
     if fails:

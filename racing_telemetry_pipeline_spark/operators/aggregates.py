@@ -18,6 +18,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _sorted_small(df: DataFrame, *cols: str) -> DataFrame:
+    """Sort a result whose row count is bounded by a small fixed key set
+    (roles, tool names) as ONE sorted partition. A global ``orderBy``
+    plans a range exchange whose sampling job runs the final aggregation
+    (for the exact percentiles, the per-group merge of every value) once
+    to sample and again to shuffle, then sorts in a third stage; one sorted
+    partition holds the same rows in the same order after one pass."""
+    return df.coalesce(1).sortWithinPartitions(*cols)
+
+
 def turns_per_conversation(routed: DataFrame) -> DataFrame:
     """Rows per (sink, conversation) — exact counts, two-level agg."""
     return (
@@ -44,7 +54,7 @@ def tool_call_frequency(
         if exact_sums
         else F.round(F.avg("latency_ms"), 4).alias("avg_latency_ms")
     )
-    return (
+    per_tool = (
         routed.filter(F.col("route") == "tool_events")
         .groupBy("tool_name")
         .agg(
@@ -53,8 +63,8 @@ def tool_call_frequency(
             F.round(pct, 4).alias("p95_latency_ms"),
             F.sum("args_bytes").alias("total_args_bytes"),
         )
-        .orderBy("tool_name")
     )
+    return _sorted_small(per_tool, "tool_name")
 
 
 def role_latency_percentiles(
@@ -98,7 +108,7 @@ def role_latency_percentiles(
     else:
         pcts = F.expr("percentile(turn_latency_sec, array(0.5, 0.95, 0.99))")
 
-    return (
+    per_role = (
         flow.groupBy("role")
         .agg(
             F.count("*").alias("n_turns"),
@@ -111,5 +121,5 @@ def role_latency_percentiles(
             F.round(F.col("_pcts")[1], 6).alias("p95_latency_sec"),
             F.round(F.col("_pcts")[2], 6).alias("p99_latency_sec"),
         )
-        .orderBy("role")
     )
+    return _sorted_small(per_role, "role")

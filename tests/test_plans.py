@@ -168,3 +168,24 @@ def test_dd2_no_self_join_single_scan(spark):
     assert "ShuffledHashJoin" in plan
     assert plan.count("FileScan parquet") == 1, plan[:2000]
     assert plan.count("ReusedExchange") >= 2
+
+
+def test_small_aggregates_sort_in_one_partition(spark, raw_unit):
+    """Role latency and tool frequency have one row per role / tool name
+    at any scale, so they sort as one partition: no range exchange, whose
+    sampling job would run the exact-percentile merge a second time."""
+    from racing_telemetry_pipeline_spark.operators.aggregates import (
+        role_latency_percentiles,
+        tool_call_frequency,
+    )
+
+    routed = _build_routed(spark, raw_unit, DEFAULTS, "builtin")
+    for df, key in (
+        (role_latency_percentiles(routed), "role"),
+        (tool_call_frequency(routed), "tool_name"),
+    ):
+        plan = _plan(df)
+        assert "rangepartitioning" not in plan.lower(), plan[:2000]
+        assert df.rdd.getNumPartitions() == 1
+        keys = [r[key] for r in df.select(key).collect()]
+        assert keys == sorted(keys)

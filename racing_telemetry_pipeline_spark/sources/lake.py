@@ -20,6 +20,7 @@ import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .parquet import _fingerprint_dir, read_parquet
 
@@ -211,8 +212,6 @@ class Lake:
         formats, so that path drops + creates — same writeTo builder, same
         partitionedBy spec.
         """
-        from pyspark.sql import functions as F
-
         ident = self._ident(name)
         writer = df.writeTo(ident).using(self.table_format)
         if partition_by:
@@ -339,10 +338,26 @@ class Lake:
         shutil.rmtree(old, ignore_errors=True)
         # repartition, not coalesce: coalesce(n) also caps the READ
         # parallelism of the rewrite, so compacting a large table would run
-        # on n tasks end-to-end. The recorded sort order is re-applied —
+        # on n tasks end-to-end. A partitioned table is hash-partitioned by
+        # its partition values into at least one task per core: each value
+        # is written by one task (one file), the write uses every core, and
+        # no task holds more open writers than values (a task holding more
+        # values than the session's concurrent-writer cap sorts its rows).
+        # A deterministic salt in [0, n_files) still splits a value larger
+        # than the target. The recorded sort order is re-applied —
         # compaction must not destroy the in-file order the original write
         # established (O2 contract).
-        df = df.repartition(int(n_files))
+        if partition_by:
+            keys = [F.col(c) for c in partition_by]
+            if n_files > 1:
+                keys.append(F.pmod(
+                    F.xxhash64("_metadata.file_path", "_metadata.row_index"),
+                    F.lit(int(n_files)),
+                ))
+            slots = self.spark.sparkContext.defaultParallelism
+            df = df.repartition(max(int(n_files), slots), *keys)
+        else:
+            df = df.repartition(int(n_files))
         if sort_within:
             df = df.sortWithinPartitions(*sort_within)
         writer = df.write.mode("overwrite")

@@ -14,7 +14,8 @@ table (a new column, a new type) is inferred again:
   streaming ``foreachBatch`` tables) is inferred on every read.
 
 The key also holds the session's ``applicationId``, so a new Spark
-application (which may set other parquet options) infers again.
+application (which may set other parquet options) infers again. Readers
+of one key that arrive together infer once: the others wait for it.
 """
 
 from __future__ import annotations
@@ -29,6 +30,10 @@ from pyspark.sql.types import StructType
 # (applicationId, path, basePath) -> (version, inferred schema); one entry
 # per path, replaced when the path's version changes
 _schemas: dict[tuple[str, str, str | None], tuple[str, StructType]] = {}
+# one lock per key, held while its schema is inferred: concurrent readers
+# of a new version (run_pipeline's post-routed stages all read the routed
+# snapshot at once) wait for the first one's inference and reuse it
+_inferring: dict[tuple[str, str, str | None], threading.Lock] = {}
 _lock = threading.Lock()
 
 
@@ -85,10 +90,11 @@ def read_parquet(
         return reader.parquet(path)
     key = (spark.sparkContext.applicationId, path, base_path)
     with _lock:
+        inferring = _inferring.setdefault(key, threading.Lock())
+    with inferring:
         hit = _schemas.get(key)
-    if hit is not None and hit[0] == version:
-        return reader.schema(hit[1]).parquet(path)
-    df = reader.parquet(path)
-    with _lock:
-        _schemas[key] = (version, df.schema)
-    return df
+        if hit is None or hit[0] != version:
+            df = reader.parquet(path)
+            _schemas[key] = (version, df.schema)
+            return df
+    return reader.schema(hit[1]).parquet(path)

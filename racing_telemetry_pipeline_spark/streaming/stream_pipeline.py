@@ -13,6 +13,14 @@ ordinal, monotonic repair over full conversations) are inherently batch
 semantics; streaming mode approximates dedup with
 ``dropDuplicatesWithinWatermark`` and defers exact repair to the batch
 compactor (the reference's layered-lake model).
+
+File-order hazard: the file source (``_read_raw_stream``) admits files
+ordered by modification time in milliseconds, then by listing order. The
+watermark assumes micro-batches arrive roughly in event-time order, so
+files that share an mtime can enter out of event-time order and the
+watermark then drops their older rows as late. Thirteen event-ordered
+files set to one mtime routed 94,564 of their 153,616 rows. A copy of a
+drop directory must keep the files' mtimes (``cp -a``).
 """
 
 from __future__ import annotations
@@ -184,6 +192,28 @@ def _start_lake_sink(
     return writer.start()
 
 
+def _stream_session(spark: SparkSession) -> SparkSession:
+    """A child of ``spark`` with one shuffle partition per task slot and
+    every other SQL setting equal to the caller's.
+
+    The watermark dedup is stateful: its partition count is frozen in the
+    checkpoint when the query is first started and AQE never coalesces it.
+    Each micro-batch then runs one task per state partition, and each task
+    loads and commits a state store and opens a parquet writer per route:
+    fixed costs that ``get_spark``'s ``max(cores, 8)`` batch oversplit
+    would pay in two waves per micro-batch on a 4-core host. A restarted
+    query keeps the count recorded in its checkpoint's offset log."""
+    child = spark.newSession()
+    inherited = child.conf.getAll
+    for k, v in spark.conf.getAll.items():
+        if inherited.get(k) != v:  # set on the caller's session at runtime
+            child.conf.set(k, v)
+    child.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    return child
+
+
 def streaming_to_lake(
     spark: SparkSession,
     source_dir: str,
@@ -195,8 +225,13 @@ def streaming_to_lake(
 ):
     """Wire the streaming route into the lake via foreachBatch (table
     ``routed_stream``, partitioned by batch and route). Returns the
-    StreamingQuery (caller awaits termination)."""
-    routed = streaming_route(spark, source_dir, settings, parse_engine)
+    StreamingQuery (caller awaits termination).
+
+    The query runs in a child session (``_stream_session``), so its state
+    has one partition per task slot; the caller's session is unchanged."""
+    routed = streaming_route(
+        _stream_session(spark), source_dir, settings, parse_engine
+    )
     return _start_lake_sink(
         routed, lake_root, "routed_stream", ("route",), checkpoint, available_now
     )

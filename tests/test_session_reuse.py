@@ -141,3 +141,40 @@ def test_stream_table_changes_drop_snapshot_id(spark, raw_unit, tmp_path):
     assert lake.snapshot_id("s")
     assert lake.vacuum_stream_batches("s", keep_batches=1) == 1
     assert lake.snapshot_id("s") is None
+
+
+def test_concurrent_reads_infer_once(spark, raw_unit, tmp_path):
+    """More threads than cores reading a new table version at once (as
+    run_pipeline's post-routed stages read the routed snapshot) launch one
+    inference job; the others wait for it and reuse its schema."""
+    import sys
+    import threading
+
+    lake = Lake(spark, str(tmp_path / "lake"))
+    raw = spark.read.parquet(raw_unit).select("conv_id", "turn_idx", "role")
+    lake.write(raw, "turns", partition_by=["role"])
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    n = 2 * sc.defaultParallelism
+    ready = threading.Barrier(n, timeout=60)
+    columns = []
+
+    def read() -> None:
+        sc.setJobGroup(group, group)
+        ready.wait()
+        columns.append(lake.read("turns").columns)
+
+    threads = [threading.Thread(target=read) for _ in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert columns == [["conv_id", "turn_idx", "role"]] * n

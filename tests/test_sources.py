@@ -4,7 +4,9 @@
 from __future__ import annotations
 
 import os
+import uuid
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from racing_telemetry_pipeline_spark.sources.lake import Lake
@@ -131,3 +133,84 @@ def test_compact_crash_window_recovery(spark, raw_unit, tmp_path):
     assert lake.read("tbl").count() == n
     assert not os.path.isdir(path + "__old")
     shutil.rmtree(path + "__compacting", ignore_errors=True)
+
+
+def _write_stage_tasks(spark, fn):
+    """``fn()``'s result and the task count of the last stage of the last
+    Spark job it launched (a compaction's parquet write)."""
+    sc = spark.sparkContext
+    group = f"compact-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    return out, tracker.getStageInfo(max(job.stageIds)).numTasks
+
+
+def _value_files(lake, name, col):
+    path = lake.table_path(name)
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(path, d)))
+        for d in os.listdir(path)
+        if d.startswith(f"{col}=")
+    }
+
+
+def _part_table(spark, raw_unit, n_values):
+    return (
+        spark.read.parquet(raw_unit)
+        .select("conv_id", "turn_idx", "role")
+        .withColumn("part", F.pmod(F.col("turn_idx"), F.lit(n_values)))
+        .repartition(16)  # 16 small files per value
+    )
+
+
+def test_compact_partitioned_one_file_per_value(spark, raw_unit, tmp_path):
+    """More partition values than cores: each value is written by one task
+    (one file), and the write runs on more than one task."""
+    n_values = 3 * spark.sparkContext.defaultParallelism
+    lake = Lake(spark, str(tmp_path / "lakep"))
+    lake.write(_part_table(spark, raw_unit, n_values), "parts",
+               partition_by=["part"])
+    before = lake.read("parts").toPandas()
+
+    n_files, write_tasks = _write_stage_tasks(
+        spark, lambda: lake.compact("parts"))
+
+    files = _value_files(lake, "parts", "part")
+    assert len(files) == n_values and set(files.values()) == {1}
+    assert n_files == n_values
+    assert write_tasks > 1
+    after = lake.read("parts").toPandas()
+    cols = ["conv_id", "turn_idx", "role", "part"]
+    pd.testing.assert_frame_equal(
+        before[cols].sort_values(cols).reset_index(drop=True),
+        after[cols].sort_values(cols).reset_index(drop=True),
+    )
+
+
+def test_compact_splits_value_larger_than_target(spark, raw_unit, tmp_path):
+    """A value larger than the target file size still lands in more than
+    one file (the salt), and no row is lost or repeated."""
+    lake = Lake(spark, str(tmp_path / "lakes"))
+    df = _part_table(spark, raw_unit, 2)
+    lake.write(df, "parts", partition_by=["part"])
+    n_rows = df.count()
+    total = sum(
+        os.path.getsize(os.path.join(dp, f))
+        for dp, _, fs in os.walk(lake.table_path("parts"))
+        for f in fs
+        if f.endswith(".parquet")
+    )
+
+    lake.compact("parts", target_file_bytes=total // 8)
+
+    files = _value_files(lake, "parts", "part")
+    assert len(files) == 2 and all(n > 1 for n in files.values()), files
+    after = lake.read("parts").select(*df.columns)
+    assert after.count() == n_rows
+    assert after.exceptAll(df).count() == 0 and df.exceptAll(after).count() == 0

@@ -386,3 +386,81 @@ def test_stream_then_compact_equals_batch(spark, raw_unit, tmp_path):
     g = got[cols].sort_values(key).reset_index(drop=True)
     w = want[cols].sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(g, w, check_like=True)
+
+
+def _state_ops(q) -> list[dict]:
+    return [p["stateOperators"][0] for p in q.recentProgress if p["stateOperators"]]
+
+
+def test_stream_state_partitions_match_task_slots(spark, raw_unit, tmp_path):
+    """streaming_to_lake gives its stateful dedup one partition (and one
+    state store) per task slot, in a child session: the caller's shuffle
+    partitions stay as they were, and a SQL setting the caller changed at
+    runtime reaches the stream's session."""
+    from racing_telemetry_pipeline_spark.streaming.stream_pipeline import (
+        _stream_session,
+        streaming_to_lake,
+    )
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    q = streaming_to_lake(spark, raw_unit, str(tmp_path / "slots_lake"))
+    q.awaitTermination(120)
+
+    slots = spark.sparkContext.defaultParallelism
+    ops = _state_ops(q)
+    assert ops
+    for op in ops:
+        assert op["numShufflePartitions"] == op["numStateStoreInstances"] == slots
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "12345678")
+    try:
+        assert _stream_session(spark).conf.get(key) == "12345678"
+    finally:
+        spark.conf.unset(key)
+
+
+def test_stream_resumes_checkpoint_state_partitions(spark, raw_unit, tmp_path):
+    """A checkpoint first written with 8 state partitions resumes at 8 (the
+    offset log's count wins over the child session's), and every row lands
+    in the lake exactly once across the two drains."""
+    import glob
+    import os
+    import shutil
+
+    from racing_telemetry_pipeline_spark.streaming.stream_pipeline import (
+        _start_lake_sink,
+        streaming_to_lake,
+    )
+
+    files = sorted(glob.glob(f"{raw_unit}/*.parquet"))
+    assert len(files) >= 2
+    src = str(tmp_path / "resume_src")
+    os.makedirs(src)
+    shutil.copy(files[0], src)
+    lake_root = str(tmp_path / "resume_lake")
+    ckpt = f"{lake_root}/_ckpt"
+
+    eight = spark.newSession()
+    eight.conf.set("spark.sql.shuffle.partitions", "8")
+    q = _start_lake_sink(
+        streaming_route(eight, src), lake_root, "routed_stream", ("route",),
+        ckpt, True,
+    )
+    q.awaitTermination(120)
+    assert {op["numStateStoreInstances"] for op in _state_ops(q)} == {8}
+
+    for f in files[1:]:
+        shutil.copy(f, src)
+    q2 = streaming_to_lake(spark, src, lake_root, checkpoint=ckpt)
+    q2.awaitTermination(120)
+    assert {op["numShufflePartitions"] for op in _state_ops(q2)} == {8}
+    assert {op["numStateStoreInstances"] for op in _state_ops(q2)} == {8}
+
+    got = spark.read.parquet(f"{lake_root}/routed_stream")
+    key = ["conv_id", "turn_idx"]
+    assert got.groupBy(*key).count().filter(F.col("count") > 1).count() == 0
+    want = spark.read.parquet(src).select(*key).distinct()
+    assert got.select(*key).exceptAll(want).count() == 0
+    assert want.exceptAll(got.select(*key)).count() == 0
